@@ -5,7 +5,7 @@ package graft.etl
   * (the reference does all of this row-interleaved over a live psycopg2
   * connection, `main_ingest.py:197-272,500-642`; here DDL is derived once
   * per batch from the aggregated schema, then applied through one JDBC
-  * connection before `df.write.jdbc` appends the rows).
+  * connection before the executors append the rows).
   *
   * All dynamic columns are TEXT by contract (§1.2: "typing is the
   * querier's job").
@@ -18,30 +18,15 @@ object JdbcDdl {
     * column per attribute (`main_ingest.py:210-231`).
     */
   def createTagTable(schema: String, tableRaw: String, attrCols: Seq[String]): String = {
-    val table = tableRaw.toLowerCase
-    val valueCol = Sanitize.valueColumnName(tableRaw)
-    val common = Seq(
-      s"${q("element_id")} TEXT PRIMARY KEY",
-      s"${q("parent_element_id")} TEXT",
-      s"${q("pcr_uuid_context")} TEXT",
-      s"${q("original_tag_name")} TEXT",
-      s"${q(valueCol)} TEXT")
-    val commonNames = TagTables.CommonColumns.toSet + valueCol
-    val attrs = attrCols.map(a => Sanitize.sanitizeXmlName(a).toLowerCase)
-      .distinct.filterNot(commonNames.contains)
-      .map(a => s"${q(a)} TEXT")
-    s"CREATE TABLE IF NOT EXISTS ${q(schema)}.${q(table)} (${(common ++ attrs).mkString(", ")});"
+    val cols = TagTables.wideColumns(tableRaw, attrCols).map { case (c, _) =>
+      s"${q(c)} TEXT" + (if (c == "element_id") " PRIMARY KEY" else "")
+    }
+    s"CREATE TABLE IF NOT EXISTS ${q(schema)}.${q(tableRaw.toLowerCase)} (${cols.mkString(", ")});"
   }
 
   /** Table COMMENT carrying the XML path (`main_ingest.py:235-240`). */
   def commentOnTable(schema: String, tableRaw: String, elementPath: String): String =
     s"COMMENT ON TABLE ${q(schema)}.${q(tableRaw.toLowerCase)} IS '${elementPath.replace("'", "''")}';"
-
-  /** Schema evolution: add newly observed attribute columns
-    * (`main_ingest.py:252-272`).
-    */
-  def addColumn(schema: String, tableRaw: String, attrCol: String): String =
-    s"ALTER TABLE ${q(schema)}.${q(tableRaw.toLowerCase)} ADD COLUMN ${q(Sanitize.sanitizeXmlName(attrCol).toLowerCase)} TEXT;"
 
   /** FK with ON DELETE CASCADE over the tree edge (`main_ingest.py:605-617`),
     * name via the 63-byte truncation contract (FkNames).
@@ -52,11 +37,6 @@ object JdbcDdl {
       s"ADD CONSTRAINT ${q(name)} FOREIGN KEY (${q("parent_element_id")}) " +
       s"REFERENCES ${q(schema)}.${q(parentRaw.toLowerCase)} (${q("element_id")}) ON DELETE CASCADE;"
   }
-
-  /** Existence probe for the FK (`main_ingest.py:586-603`). */
-  def fkExistsQuery: String =
-    "SELECT constraint_name FROM information_schema.table_constraints " +
-      "WHERE table_schema = ? AND table_name = ? AND constraint_name = ?;"
 
   /** Bootstrap control tables (`database_setup.py:66-95`), dialect-typed
     * so the same contract runs on engines without SERIAL/TIMESTAMPTZ or

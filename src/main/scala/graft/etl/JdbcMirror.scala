@@ -1,8 +1,9 @@
 package graft.etl
 
-import java.sql.{Connection, DriverManager, SQLException}
+import java.sql.{Connection, DriverManager, PreparedStatement, SQLException, Types}
 import java.util.Properties
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
@@ -17,13 +18,17 @@ import scala.collection.mutable
   * (`main_ingest.py:53-64,729`).
   *
   * Division of labor at scale: the driver holds ONLY schema metadata
-  * (attribute keysets, FK edge set — both tiny, derived by one
-  * distributed agg each) and issues DDL over a single JDBC connection;
-  * all row traffic flows executor->DB through `df.write.jdbc` with
-  * `batchsize` (vs the reference's one INSERT roundtrip per element,
-  * `main_ingest.py:492`). The keyed pre-delete never inlines an
-  * unbounded key list: small key sets go as chunked IN statements,
-  * large ones via an executor-written staging key table.
+  * (per table: XML path, attribute keys, FK edges — tiny, derived by
+  * one distributed aggregation) and issues DDL over a single JDBC
+  * connection; all row traffic flows executor->DB in two jobs, one for
+  * the container rows and one for the PCR rows partitioned by PCR, each
+  * task appending through one batched `PreparedStatement` per table
+  * (vs the reference's one INSERT roundtrip per element,
+  * `main_ingest.py:492`). The job count does not grow with the number
+  * of tag tables. The keyed pre-delete runs only on tables that existed
+  * before the batch, and never inlines an unbounded key list: small key
+  * sets go as chunked IN statements, large ones via an executor-written
+  * staging key table.
   */
 object JdbcMirror {
 
@@ -151,8 +156,9 @@ object JdbcMirror {
     found
   }
 
-  /** Kahn topo-sort, parents (FK targets) first; tables on a cycle
-    * (self-nesting tags) are appended last in name order — their
+  /** Kahn topo-sort, parents (FK targets) first. A self-nesting tag is
+    * no cycle here: its rows are written in document order. Tables on a
+    * cycle of two or more tables are appended last in name order — their
     * intra-batch FK rows may need deferred constraints on such schemas.
     */
   private[etl] def topoParentsFirst(tables: Set[String], edges: Seq[(String, String)]): Seq[String] = {
@@ -310,72 +316,90 @@ object JdbcMirror {
   }
 
   /** Create-or-evolve one tag table: fixed columns + observed attribute
-    * columns (A12/A13), returning its full lowercase column set. On
-    * first create, the element's XML path is stamped as the table
+    * columns (A12/A13). Returns true when this call created the table.
+    * On first create, the element's XML path is stamped as the table
     * COMMENT on dialects that support it — the reference's
     * self-documenting-schema contract (`main_ingest.py:235-240`).
     */
   def ensureTable(conn: Connection, cfg: MirrorConfig, tableRaw: String,
       attrCols: Seq[String], elementPath: Option[String] = None,
-      cache: ColumnCache = mutable.Map.empty): Set[String] = {
+      cache: ColumnCache = mutable.Map.empty): Boolean = {
     val table = tableRaw.toLowerCase
-    val valueCol = Sanitize.valueColumnName(tableRaw)
-    val wanted: Seq[(String, String)] =
-      (TagTables.CommonColumns :+ valueCol).map(_ -> cfg.dialect.textType) ++
-        attrCols.map(a => Sanitize.sanitizeXmlName(a).toLowerCase -> cfg.dialect.textType)
+    val wanted = TagTables.wideColumns(tableRaw, attrCols).map(_._1)
     val existing = tableColumns(conn, cfg, table, cache)
+    invalidate(cfg, table, cache)
     if (existing.isEmpty) {
-      val colsSql = wanted.distinctBy(_._1).map { case (c, t) =>
+      val colsSql = wanted.map { c =>
         // id columns get an indexable narrow type on engines that cannot
         // index wide VARCHARs (Derby); FK column type must match the PK's
         val typ =
           if ((c == "element_id" || c == "parent_element_id") && cfg.dialect == DerbyDialect)
             "VARCHAR(64)"
-          else t
+          else cfg.dialect.textType
         val pk = if (c == "element_id") " NOT NULL PRIMARY KEY" else ""
         s"${q(c)} $typ$pk"
       }.mkString(", ")
       exec(conn, s"CREATE TABLE ${q(cfg.schema)}.${q(table)} ($colsSql)")
       if (cfg.dialect.supportsComments)
         elementPath.foreach(p => exec(conn, JdbcDdl.commentOnTable(cfg.schema, table, p)))
-      invalidate(cfg, table, cache)
+      true
     } else {
-      wanted.map(_._1).distinct.filterNot(existing.contains).foreach { c =>
+      wanted.filterNot(existing.contains).foreach { c =>
         exec(conn, s"ALTER TABLE ${q(cfg.schema)}.${q(table)} ADD COLUMN ${q(c)} ${cfg.dialect.textType}")
-        invalidate(cfg, table, cache)
       }
+      false
     }
-    tableColumns(conn, cfg, table, cache)
   }
 
-  /** Mirror one ingest batch. Returns the set of mirrored table names. */
+  /** Runs `body` with `description` as the Spark job description of the
+    * calling thread, then restores the caller's. The job group is left
+    * alone: callers attribute jobs by it.
+    */
+  private def phase[A](sc: SparkContext, description: String)(body: => A): A = {
+    val prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(description)
+    try body finally sc.setJobDescription(prior)
+  }
+
+  /** Mirror one ingest batch. Returns the set of mirrored table names.
+    *
+    * The number of Spark jobs is fixed, whatever the number of tag
+    * tables: one aggregation plans the DDL (`mirror: plan`, plus the
+    * keyed-delete probes when a table of the batch already exists), one
+    * job writes the container rows (`mirror: containers`) and one the
+    * PCR rows (`mirror: rows`).
+    */
   def mirrorBatch(tall: DataFrame, cfg: MirrorConfig): Set[String] = {
     if (cfg.dialect == DerbyDialect) registerDerbyDialect
+    val sc = tall.sparkSession.sparkContext
     val cache: ColumnCache = mutable.Map.empty // batch-local (A14)
-    // merge attribute keysets across tag-case variants: <eVitals.06> and
-    // <EVitals.06> both land in table "evitals_06" and must contribute
-    // their attributes to the SAME column set
-    val attrsByTable: Map[String, Seq[String]] =
-      TagTables.attributeColumns(tall)
-        .groupBy(_._1.toLowerCase)
-        .map { case (t, m) => t -> m.values.flatten.toSeq.distinct.sorted }
-    // one collect yields both the table set and each table's canonical
-    // XML path for the COMMENT stamp (min = "first element" made
-    // deterministic; the reference takes whichever element it saw first,
-    // main_ingest.py:235-240)
-    val tablePaths: Map[String, String] =
-      tall.groupBy(lower(col("table_name")).as("t"))
-        .agg(min(col("element_path")).as("p"))
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val tables = tablePaths.keySet
+    val info = phase(sc, "mirror: plan")(TagTables.tableInfo(tall))
+    val tables = info.keySet
+
+    // Bootstrap + schema-version gate run FIRST, before any staging
+    // work: a gate refusal must cost one SELECT, not a multi-million-key
+    // executor->DB write plus leaked staging tables. The same connection
+    // finds which of the batch's tables already exist: only those can
+    // hold rows the keyed delete has to evict.
+    val gateConn = connect(cfg)
+    val preexisting = try {
+      if (cfg.createControlTables) ensureControlTables(gateConn, cfg)
+      cfg.requireSchemaVersion.foreach { v =>
+        if (lookupSchemaVersion(gateConn, cfg, v).isEmpty) throw new SchemaVersionMissing(v)
+      }
+      val found = tables.filter(t => tableColumns(gateConn, cfg, t, cache).nonEmpty)
+      // the DDL pass re-reads the catalog, after the probe jobs below: a
+      // table or column a concurrent batch adds meanwhile must not meet
+      // a stale column set
+      cache.clear()
+      found
+    } finally gateConn.close()
+
     // Keyed delete planning: collect at most maxInline+1 keys — if the
     // batch exceeds the inline budget, the key SET never lands on the
     // driver; it is written executor->DB into a staging table instead.
     val distinctKeys = tall.select("pcr_uuid_context")
       .where(col("pcr_uuid_context").isNotNull).distinct()
-    val inlineProbe = distinctKeys.limit(cfg.maxInlineDeleteKeys + 1)
-      .collect().map(_.getString(0)).toSeq
-    val useStaging = inlineProbe.size > cfg.maxInlineDeleteKeys
     // Container elements (document root/header) carry no PCR context, so
     // the keyed delete misses them; with deterministic ids a same-file
     // replay would then violate the element_id PK. Evict them by id —
@@ -387,14 +411,18 @@ object JdbcMirror {
     // the driver.
     val containers = tall.where(col("pcr_uuid_context").isNull)
       .select(lower(col("table_name")).as("t"), col("element_id").as("k"))
-    val containerProbe = containers.limit(cfg.maxInlineDeleteKeys + 1).collect()
+    val (inlineProbe, containerProbe) =
+      if (preexisting.isEmpty) (Seq.empty[String], Array.empty[Row])
+      else phase(sc, "mirror: plan") {
+        (distinctKeys.limit(cfg.maxInlineDeleteKeys + 1).collect().map(_.getString(0)).toSeq,
+          containers.limit(cfg.maxInlineDeleteKeys + 1).collect())
+      }
+    val useStaging = inlineProbe.size > cfg.maxInlineDeleteKeys
     val useContainerStaging = containerProbe.length > cfg.maxInlineDeleteKeys
     val containerIds: Map[String, Seq[String]] =
       if (useContainerStaging) Map.empty
       else containerProbe.groupBy(_.getString(0))
         .map { case (t, rows) => t -> rows.map(_.getString(1)).toSeq }
-    val edges = TagTables.fkEdges(tall).collect()
-      .map(r => (r.getString(0), r.getString(1)))
 
     val props = new Properties()
     if (cfg.user.nonEmpty) props.put("user", cfg.user)
@@ -411,26 +439,15 @@ object JdbcMirror {
     val containerStaging = s"${StagingKeyTable}_c_$batchTag"
     val kType = if (cfg.dialect == DerbyDialect) "VARCHAR(64)" else cfg.dialect.keyTextType
 
-    // Bootstrap + schema-version gate run FIRST, before any staging
-    // work: a gate refusal must cost one SELECT, not a multi-million-key
-    // executor->DB write plus leaked staging tables.
-    val gateConn = connect(cfg)
-    try {
-      if (cfg.createControlTables) ensureControlTables(gateConn, cfg)
-      cfg.requireSchemaVersion.foreach { v =>
-        if (lookupSchemaVersion(gateConn, cfg, v).isEmpty) throw new SchemaVersionMissing(v)
-      }
-    } finally gateConn.close()
-
-    try {
-      if (useStaging) {
+    val created = try {
+      if (useStaging) phase(sc, "mirror: plan") {
         val conn0 = connect(cfg)
         try exec(conn0, s"CREATE TABLE ${q(cfg.schema)}.${q(keyStaging)} (${q("k")} $kType NOT NULL)")
         finally conn0.close()
         distinctKeys.toDF("k").write.mode(SaveMode.Append)
           .jdbc(cfg.url, s"${q(cfg.schema)}.${q(keyStaging)}", props)
       }
-      if (useContainerStaging) {
+      if (useContainerStaging) phase(sc, "mirror: plan") {
         val conn0 = connect(cfg)
         try exec(conn0, s"CREATE TABLE ${q(cfg.schema)}.${q(containerStaging)} " +
           s"(${q("t")} $kType NOT NULL, ${q("k")} $kType NOT NULL)")
@@ -443,26 +460,31 @@ object JdbcMirror {
       try {
         conn.setAutoCommit(false)
         try {
-          tables.foreach { t =>
-            ensureTable(conn, cfg, t, attrsByTable.getOrElse(t, Seq.empty),
-              tablePaths.get(t), cache)
+          val out = tables.filter { t =>
+            val isNew = ensureTable(conn, cfg, t, info(t).attributes, Some(info(t).elementPath), cache)
             // A15 keyed pre-delete: chunked IN statements (bounded size),
-            // or one set-oriented DELETE against the staging key table
-            if (useStaging)
-              exec(conn, JdbcDdl.deleteViaStaging(cfg.schema, t, keyStaging))
-            else if (inlineProbe.nonEmpty)
-              JdbcDdl.deleteByKeys(cfg.schema, t, inlineProbe, cfg.deleteChunkSize)
-                .foreach(exec(conn, _))
-            if (useContainerStaging)
-              exec(conn, s"DELETE FROM ${q(cfg.schema)}.${q(t)} WHERE ${q("element_id")} IN " +
-                s"(SELECT ${q("k")} FROM ${q(cfg.schema)}.${q(containerStaging)} " +
-                s"WHERE ${q("t")} = '${t.replace("'", "''")}')")
-            containerIds.get(t).filter(_.nonEmpty).foreach { ids =>
-              JdbcDdl.deleteByKeys(cfg.schema, t, ids, cfg.deleteChunkSize,
-                keyCol = "element_id").foreach(exec(conn, _))
+            // or one set-oriented DELETE against the staging key table. A
+            // table this transaction created is empty and invisible to
+            // others until commit: nothing to evict.
+            if (!isNew) {
+              if (useStaging)
+                exec(conn, JdbcDdl.deleteViaStaging(cfg.schema, t, keyStaging))
+              else if (inlineProbe.nonEmpty)
+                JdbcDdl.deleteByKeys(cfg.schema, t, inlineProbe, cfg.deleteChunkSize)
+                  .foreach(exec(conn, _))
+              if (useContainerStaging)
+                exec(conn, s"DELETE FROM ${q(cfg.schema)}.${q(t)} WHERE ${q("element_id")} IN " +
+                  s"(SELECT ${q("k")} FROM ${q(cfg.schema)}.${q(containerStaging)} " +
+                  s"WHERE ${q("t")} = '${t.replace("'", "''")}')")
+              containerIds.get(t).filter(_.nonEmpty).foreach { ids =>
+                JdbcDdl.deleteByKeys(cfg.schema, t, ids, cfg.deleteChunkSize,
+                  keyCol = "element_id").foreach(exec(conn, _))
+              }
             }
+            isNew
           }
           conn.commit()
+          out
         } catch { case e: Throwable => conn.rollback(); throw e }
       } finally conn.close()
     } finally {
@@ -483,34 +505,103 @@ object JdbcMirror {
       }
     }
 
-    // Row traffic: executors -> DB, batched appends per tag table —
-    // parents before children (topological order over the FK edges), so
-    // constraints from earlier batches hold during insert; the reference
-    // gets this implicitly from row-at-a-time preorder inserts.
-    val orderedTables = topoParentsFirst(tables, edges.map {
-      case (c, p) => (c.toLowerCase, p.toLowerCase)
-    }.toSeq)
-    orderedTables.foreach { t =>
-      val attrs = attrsByTable.getOrElse(t, Seq.empty)
-      TagTables.wideView(tall, t, attrs)
-        .write.mode(SaveMode.Append)
-        .jdbc(cfg.url, s"${q(cfg.schema)}.${q(t)}", props)
+    // Row traffic: executors -> DB. Container rows first (their parents
+    // are containers of the same file), then PCR rows, all of one PCR in
+    // one task. Within a task rows go parents' tables first
+    // (topological order over the FK edges), then in document order, so
+    // FKs left by earlier batches hold during insert, self-nesting tags
+    // included; the reference gets this implicitly from row-at-a-time
+    // preorder inserts.
+    val edges = info.values.flatMap(_.fkEdges).toSeq
+    if (tables.nonEmpty) {
+      val rank = topoParentsFirst(tables, edges.map {
+        case (c, p) => (c.toLowerCase, p.toLowerCase)
+      }).zipWithIndex.toMap
+      val columns = tables.map(t => t -> TagTables.wideColumns(t, info(t).attributes)).toMap
+      val pcr = col("pcr_uuid_context")
+      phase(sc, "mirror: containers")(
+        appendRows(tall.where(pcr.isNull), col("source_file"), rank, columns, cfg))
+      phase(sc, "mirror: rows")(appendRows(tall.where(pcr.isNotNull), pcr, rank, columns, cfg))
     }
 
-    // A18/A19: FK edges with truncation-safe names, created once.
+    // A18/A19: FK edges with truncation-safe names, created once. Names
+    // are deduplicated case-blind: the `EVitals_06`/`eVitals_06`
+    // spellings share one table, which gets one FK per parent, not two
+    // that differ in case. A table created by this batch holds no
+    // constraint yet, so it needs no probe.
     val conn2 = connect(cfg)
     try {
       conn2.setAutoCommit(false)
       try {
-        edges.foreach { case (childRaw, parentRaw) =>
-          val name = FkNames.fkConstraintName(childRaw, parentRaw)
-          if (!constraintExists(conn2, cfg, childRaw.toLowerCase, name))
-            exec(conn2, JdbcDdl.addForeignKey(cfg.schema, childRaw, parentRaw))
-        }
+        edges.distinctBy { case (c, p) => FkNames.fkConstraintName(c, p).toLowerCase }
+          .foreach { case (childRaw, parentRaw) =>
+            val child = childRaw.toLowerCase
+            val name = FkNames.fkConstraintName(childRaw, parentRaw)
+            if (created(child) || !constraintExists(conn2, cfg, child, name))
+              exec(conn2, JdbcDdl.addForeignKey(cfg.schema, childRaw, parentRaw))
+          }
         conn2.commit()
       } catch { case e: Throwable => conn2.rollback(); throw e }
     } finally conn2.close()
     tables
+  }
+
+  /** One Spark job appending `rows` to their tag tables: rows are
+    * partitioned by `key`, and each task sorts its rows by (table rank,
+    * source file, preorder) and appends them through one batched
+    * `PreparedStatement` per table and one transaction per task.
+    */
+  private def appendRows(rows: DataFrame, key: Column, rank: Map[String, Int],
+      columns: Map[String, Seq[(String, Either[String, String])]], cfg: MirrorConfig): Unit = {
+    // plain values only: the closure is shipped to executors
+    val (url, user, password, schema, batchSize) =
+      (cfg.url, cfg.user, cfg.password, cfg.schema, cfg.batchSize)
+    val table = lower(col("table_name"))
+    val sources = columns.values.flatten.collect { case (_, Left(c)) => c }.toSeq.distinct
+    rows.repartition(key)
+      .sortWithinPartitions(element_at(typedLit(rank), table), col("source_file"), col("preorder"))
+      .select(table.as("__table") +: col("attributes").as("__attributes") +: sources.map(col): _*)
+      .foreachPartition { (it: Iterator[Row]) =>
+        if (it.hasNext) {
+          val p = new Properties()
+          if (user.nonEmpty) p.put("user", user)
+          if (password.nonEmpty) p.put("password", password)
+          val conn = DriverManager.getConnection(url, p)
+          try {
+            conn.setAutoCommit(false)
+            var current: String = null
+            var cols: Seq[(String, Either[String, String])] = Nil
+            var ps: PreparedStatement = null
+            var pending = 0
+            def flush(): Unit = if (pending > 0) { ps.executeBatch(); pending = 0 }
+            try {
+              it.foreach { r =>
+                val t = r.getString(0)
+                if (t != current) {
+                  flush()
+                  if (ps != null) ps.close()
+                  current = t
+                  cols = columns(t)
+                  ps = conn.prepareStatement(
+                    s"INSERT INTO ${q(schema)}.${q(t)} (${cols.map(c => q(c._1)).mkString(", ")}) " +
+                      s"VALUES (${cols.map(_ => "?").mkString(", ")})")
+                }
+                val attrs = r.getMap[String, String](1).map { case (k, v) => k.toLowerCase -> v }
+                cols.iterator.zipWithIndex.foreach { case ((_, source), i) =>
+                  val v = source.fold(r.getAs[String](_), attrs.getOrElse(_, null))
+                  if (v == null) ps.setNull(i + 1, Types.VARCHAR) else ps.setString(i + 1, v)
+                }
+                ps.addBatch()
+                pending += 1
+                if (pending >= batchSize) flush()
+              }
+              flush()
+            } finally if (ps != null) ps.close()
+            conn.commit()
+          } catch { case e: Throwable => conn.rollback(); throw e }
+          finally conn.close()
+        }
+      }
   }
 
   /** Land vendor sidecar tables in the RDBMS (A26-A29's DB half): per

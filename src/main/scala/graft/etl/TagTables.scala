@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Per-tag table routing (SURVEY A11/A12/A16): the reference fans each
@@ -21,52 +21,78 @@ object TagTables {
   val CommonColumns: Seq[String] =
     Seq("element_id", "parent_element_id", "pcr_uuid_context", "original_tag_name")
 
-  /** Distinct attribute keys per table in ONE distributed pass
-    * (vs the reference's per-row `information_schema` probing).
-    * Keys are lowercased as the DDL layer does (`main_ingest.py:221`).
+  /** What a batch holds of one tag table: the smallest XML path among its
+    * elements (`min` makes the reference's "first element seen"
+    * deterministic, `main_ingest.py:235-240`), its attribute keys
+    * lowercased as the DDL layer does (`main_ingest.py:221`) minus the
+    * fixed columns, and its observed (child_table, parent_table) edges
+    * with the tags' original spellings (FK names keep them).
     */
-  def attributeColumns(tall: DataFrame): Map[String, Seq[String]] =
-    tall.select(col("table_name"), explode(map_keys(col("attributes"))).as("k"))
-      .select(col("table_name"), lower(col("k")).as("k"))
-      .distinct()
+  final case class TableInfo(elementPath: String, attributes: Seq[String],
+      fkEdges: Seq[(String, String)])
+
+  /** Every table of a batch in ONE distributed aggregation (vs the
+    * reference's per-row `information_schema` probing), keyed by the
+    * lowercased table name. Tag spellings that differ only in case
+    * (`<eVitals.06>`, `<EVitals.06>`) land in the same table, so their
+    * paths, attribute keys and edges are merged here.
+    */
+  def tableInfo(tall: DataFrame): Map[String, TableInfo] =
+    tall.groupBy(col("table_name"))
+      .agg(min(col("element_path")),
+        collect_set(transform(map_keys(col("attributes")), lower(_))),
+        collect_set(col("parent_table_name")))
       .collect()
-      .groupBy(_.getString(0))
+      .groupBy(_.getString(0).toLowerCase)
       .map { case (t, rows) =>
-        t -> rows.map(_.getString(1)).toSeq
-          .filterNot(CommonColumns.contains).sorted
+        t -> TableInfo(
+          rows.map(_.getString(1)).min,
+          rows.flatMap(_.getSeq[scala.collection.Seq[String]](2)).flatten.distinct
+            .filterNot(CommonColumns.contains).sorted.toSeq,
+          rows.flatMap(r => r.getSeq[String](3).map(r.getString(0) -> _)).sorted.toSeq)
       }
 
-  /** The reference's per-tag wide table as a DataFrame view:
-    * `element_id, parent_element_id, pcr_uuid_context, original_tag_name,
-    * {table}_value, <attr columns...>` — all StringType ("typing is the
-    * querier's job", SURVEY §1.2).
+  /** Attribute keys per table, keyed by the lowercased table name. */
+  def attributeColumns(tall: DataFrame): Map[String, Seq[String]] =
+    tableInfo(tall).map { case (t, info) => t -> info.attributes }
+
+  /** The reference's per-tag wide table shape, the one definition the
+    * views and the JDBC mirror share: `element_id, parent_element_id,
+    * pcr_uuid_context, original_tag_name, {table}_value, <attr columns...>`
+    * in DDL order. Each column comes with its source: `Left` names the
+    * tall column that fills it, `Right` the lowercased attribute key.
+    * Attribute column names are sanitized and lowercased (the DDL
+    * contract, `main_ingest.py:219-227`); one that collides with a fixed
+    * column is dropped.
+    */
+  def wideColumns(tableNameRaw: String, attrCols: Seq[String]): Seq[(String, Either[String, String])] = {
+    val fixed: Seq[(String, Either[String, String])] = Seq(
+      "element_id" -> Left("element_id"),
+      "parent_element_id" -> Left("parent_element_id"),
+      "pcr_uuid_context" -> Left("pcr_uuid_context"),
+      "original_tag_name" -> Left("element_tag"),
+      Sanitize.valueColumnName(tableNameRaw) -> Left("text_value"))
+    val attrs = attrCols.map(k => Sanitize.sanitizeXmlName(k).toLowerCase -> Right(k.toLowerCase))
+    (fixed ++ attrs).distinctBy(_._1)
+  }
+
+  /** The wide shape of one tag as a DataFrame view, all StringType
+    * ("typing is the querier's job", SURVEY §1.2).
     */
   def wideView(tall: DataFrame, tableNameRaw: String, attrCols: Seq[String]): DataFrame = {
-    val lowered = tableNameRaw.toLowerCase
-    val valueCol = Sanitize.valueColumnName(tableNameRaw)
     // attribute COLUMN names are lowercased (DDL contract) but the map
     // keys keep the XML's original case — lookups must be case-blind
     val loweredAttrs = transform_keys(col("attributes"), (k, _) => lower(k))
-    val attrs: Seq[Column] = attrCols.filterNot(c => CommonColumns.contains(c) || c == valueCol)
-      .map(k => element_at(loweredAttrs, k.toLowerCase).as(k))
-    tall.where(lower(col("table_name")) === lowered)
-      .select(
-        col("element_id") +:
-          col("parent_element_id") +:
-          col("pcr_uuid_context") +:
-          col("element_tag").as("original_tag_name") +:
-          col("text_value").as(valueCol) +:
-          attrs: _*)
+    tall.where(lower(col("table_name")) === tableNameRaw.toLowerCase)
+      .select(wideColumns(tableNameRaw, attrCols).map {
+        case (name, Left(tallCol)) => col(tallCol).as(name)
+        case (name, Right(key)) => element_at(loweredAttrs, key).as(name)
+      }: _*)
   }
 
-  /** All wide views, attribute sets discovered in one pass. */
-  def wideViews(tall: DataFrame): Map[String, DataFrame] = {
-    val attrsByTable = attributeColumns(tall)
-    tall.select(lower(col("table_name")).as("t")).distinct().collect()
-      .map(_.getString(0))
-      .map(t => t -> wideView(tall, t, attrsByTable.getOrElse(t, Seq.empty)))
-      .toMap
-  }
+  /** All wide views, tables and attribute sets discovered in one pass. */
+  def wideViews(tall: DataFrame): Map[String, DataFrame] =
+    attributeColumns(tall).map { case (t, attrs) => t -> wideView(tall, t, attrs) }
 
   /** Canonical lake write: tall table partitioned by tag. Dynamic
     * partition overwrite only rewrites the tags present in `tall`.

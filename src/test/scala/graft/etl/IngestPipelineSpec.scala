@@ -43,7 +43,7 @@ class IngestPipelineSpec extends AnyFunSuite with SparkSpec {
 
     // wide view honors the {table}_value naming contract
     val attrs = TagTables.attributeColumns(tall)
-    val wide = TagTables.wideView(tall, "evitals_06", attrs.getOrElse("eVitals_06", Seq("codetype")))
+    val wide = TagTables.wideView(tall, "evitals_06", attrs("evitals_06"))
     assert(wide.columns.contains("evitals_06_value"))
     assert(wide.columns.contains("codetype"))
     assert(wide.select("evitals_06_value").collect().map(_.getString(0)).toSet == Set("120"))

@@ -1,6 +1,7 @@
 package graft.etl
 
 import java.sql.DriverManager
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 
@@ -179,6 +180,100 @@ class JdbcMirrorSpec extends AnyFunSuite with SparkSpec {
     assert(queryCount(
       """SELECT count(*) FROM "APP".XMLFilesProcessed
         |WHERE ProcessedFileID = 'pf-3' AND SchemaVersionID IS NULL""".stripMargin) == 1)
+  }
+
+  private def freshCfg(db: String) =
+    JdbcMirror.MirrorConfig(s"jdbc:derby:memory:$db;create=true", dialect = JdbcMirror.DerbyDialect)
+
+  private def queryAll(cfg: JdbcMirror.MirrorConfig, sql: String): Seq[String] = {
+    val conn = DriverManager.getConnection(cfg.url)
+    try {
+      val rs = conn.createStatement().executeQuery(sql)
+      val out = Seq.newBuilder[String]
+      while (rs.next()) out += rs.getString(1)
+      out.result()
+    } finally conn.close()
+  }
+
+  private def fkNames(cfg: JdbcMirror.MirrorConfig, table: String): Seq[String] =
+    queryAll(cfg, "SELECT c.CONSTRAINTNAME FROM SYS.SYSCONSTRAINTS c " +
+      s"JOIN SYS.SYSTABLES t ON c.TABLEID = t.TABLEID WHERE c.TYPE = 'F' AND t.TABLENAME = '$table'")
+
+  test("tag spellings differing in case: one table, one FK, attribute columns of both") {
+    val fresh = freshCfg("graftmirrorcase")
+    val doc =
+      """<EMSDataSet><PatientCareReport UUID="pcr-case">
+        |<eVitals.06 CodeType="ct">120</eVitals.06>
+        |<EVitals.06 Units="mmHg">130</EVitals.06>
+        |</PatientCareReport></EMSDataSet>""".stripMargin
+    assert(JdbcMirror.mirrorBatch(tallOf("case.xml" -> doc), fresh) ==
+      Set("emsdataset", "patientcarereport", "evitals_06"))
+    assert(fkNames(fresh, "evitals_06").size == 1)
+    val cols = queryAll(fresh, "SELECT c.COLUMNNAME FROM SYS.SYSCOLUMNS c " +
+      "JOIN SYS.SYSTABLES t ON c.REFERENCEID = t.TABLEID WHERE t.TABLENAME = 'evitals_06'").toSet
+    assert(Set("codetype", "units").subsetOf(cols), cols)
+    assert(queryAll(fresh, """SELECT "units" FROM "APP"."evitals_06" WHERE "evitals_06_value" = '130'""") ==
+      Seq("mmHg"))
+    // the wide views see the same merged attribute set
+    val view = TagTables.wideViews(tallOf("case.xml" -> doc))("evitals_06")
+    assert(Set("codetype", "units").subsetOf(view.columns.toSet))
+  }
+
+  test("self-nesting tag: a second batch lands while the self-FK is in place") {
+    // the nesting tag is the document root, so its only parent table is
+    // itself (a tag under two parent tables gets two FKs on one column)
+    val fresh = freshCfg("graftmirrorself")
+    def nested(i: Int, v: String): String =
+      s"""<eOther.Group><eOther.01>$v-1</eOther.01>
+         |<eOther.Group><eOther.01>$v-2</eOther.01>
+         |<eOther.Group><eOther.01>$v-3</eOther.01>
+         |<PatientCareReport UUID="pcr-n$i"><eVitals.06>$v</eVitals.06></PatientCareReport>
+         |</eOther.Group></eOther.Group></eOther.Group>""".stripMargin
+    JdbcMirror.mirrorBatch(tallOf((1 to 4).map(i => s"n$i.xml" -> nested(i, "a")): _*), fresh)
+    assert(fkNames(fresh, "eother_group").map(_.toLowerCase) == Seq("fk_eother_group_eother_group"))
+    // replay of two files with new values plus two new files; rows reach
+    // the mirror children first, so only the mirror's own ordering keeps
+    // each parent ahead of its children, in container and PCR rows alike
+    val second = tallOf(Seq(1, 2, 5, 6).map(i => s"n$i.xml" -> nested(i, "b")): _*)
+      .orderBy(col("preorder").desc)
+    JdbcMirror.mirrorBatch(second, fresh)
+    assert(queryAll(fresh, """SELECT count(*) FROM "APP"."eother_group"""") == Seq("18"))
+    assert(queryAll(fresh,
+      """SELECT count(*) FROM "APP"."eother_01" WHERE "eother_01_value" LIKE 'b-%'""") == Seq("12"))
+    assert(queryAll(fresh,
+      """SELECT "evitals_06_value" FROM "APP"."evitals_06" ORDER BY 1""") == Seq("a", "a", "b", "b", "b", "b"))
+  }
+
+  test("mirrorBatch runs as many Spark jobs for 12 tags as for 3") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val group = "jdbc-mirror-job-count"
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    def jobsOf(tall: org.apache.spark.sql.DataFrame, db: String): Int = {
+      org.apache.spark.GraftListenerBusBridge.drain(sc)
+      jobs.set(0)
+      sc.setJobGroup(group, "mirror job count")
+      try JdbcMirror.mirrorBatch(tall, freshCfg(db)) finally sc.clearJobGroup()
+      org.apache.spark.GraftListenerBusBridge.drain(sc)
+      jobs.get()
+    }
+    def wide(pcr: String): String =
+      s"""<EMSDataSet><PatientCareReport UUID="$pcr">""" +
+        (1 to 10).map(i => f"<eWide.$i%02d>v$i</eWide.$i%02d>").mkString +
+        "</PatientCareReport></EMSDataSet>"
+    sc.addSparkListener(listener)
+    try {
+      val three = tallOf("j1.xml" -> xml("pcr-j1", "1"), "j2.xml" -> xml("pcr-j2", "2"))
+      val twelve = tallOf("w1.xml" -> wide("pcr-w1"), "w2.xml" -> wide("pcr-w2"))
+      val n3 = jobsOf(three, "graftjobs3")
+      val n12 = jobsOf(twelve, "graftjobs12")
+      assert(n3 > 0)
+      assert(n3 == n12, s"3 tags: $n3 jobs, 12 tags: $n12 jobs")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("postgres-dialect DDL: bootstrap + comment stamped on first create") {
