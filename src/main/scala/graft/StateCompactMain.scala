@@ -45,8 +45,8 @@ object StateCompactMain {
       case "graph"    => GraphStreams.compact(spark, dir)
       case "pipeline" => PipelineStreams.compact(spark, dir)
       case "search"   => SearchStreams.compact(spark, dir)
-      case "lm"       => ModelStreams.compact(spark, dir, Seq("uni", "bi"))
-      case "dsir"     => ModelStreams.compact(spark, dir, Seq("buckets"))
+      case "lm"       => ModelStreams.compact(spark, dir)
+      case "dsir"     => ModelStreams.compact(spark, dir)
       case "clusters" => ClusterStreams.compact(spark, dir)
       case other => throw new IllegalArgumentException(
         s"unknown state kind: $other\n$usage")

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * binaryFile scan -> executor-side flatten -> keyed overwrite against the
   * existing lake -> tall write partitioned by tag -> FK-edge table ->
   * audit append (last, so replays are detectable). The whole row path is
-  * distributed; the driver only sees per-file statuses (one tiny collect)
-  * and DDL metadata.
+  * distributed; only per-file statuses with their PCR ids (one small
+  * collect) and DDL metadata leave the executors.
   *
   * Storage layout under `lakeDir`:
   *   elements/   tall element table, partitioned by table_name
@@ -103,14 +103,64 @@ object IngestPipeline {
       renameOrThrow(fs, bak, elems)
   }
 
+  /** The lake commit of both ingest paths, under the lake lock from the
+    * existing-lake read through the swap (a concurrent writer can never
+    * swap between our snapshot and our swap):
+    *
+    *  1. recover an interrupted swap ([[recoverLake]]);
+    *  2. keep each PCR's rows from only the batch file that sorts last
+    *     by `source_file`, so a PCR issued in two files of one batch
+    *     has one defined winner. The winners come from `pcrFiles`, the
+    *     batch's distinct (PCR, file) pairs, collected; when a PCR is in
+    *     more than one file they are broadcast into the batch, otherwise
+    *     the row path is left as it is;
+    *  3. idempotent keyed overwrite (A15): evict lake rows of
+    *     re-ingested PCRs, and rows of replayed files (container
+    *     elements like the document root carry no PCR context; without
+    *     the file-level eviction a same-file replay would duplicate
+    *     them — the reference actually does accumulate such rows, but
+    *     with fresh uuid4 ids; our deterministic ids make the
+    *     file-level replace both safe and strictly more idempotent);
+    *  4. the crash-safe tmp+swap ([[writeMergedLakeUnlocked]]): a plain
+    *     dynamic partition overwrite would leave a tag partition
+    *     untouched when the merge evicted ALL of its rows, resurrecting
+    *     them.
+    *
+    * Returns the winner-filtered batch, which is what landed.
+    */
+  private def commitBatch(spark: SparkSession, batch: DataFrame,
+      pcrFiles: Iterable[(String, String)],
+      lakeDir: String): DataFrame = withLakeLock(spark, lakeDir) {
+    recoverLake(spark, lakeDir)
+    val contested = pcrFiles.groupBy(_._1).collect {
+      case (pcr, files) if files.size > 1 => (pcr, files.map(_._2).max)
+    }
+    val kept =
+      if (contested.isEmpty) batch
+      else {
+        import spark.implicits._
+        val winners = contested.toSeq.toDF("pcr_uuid_context", "__winner")
+        batch.join(broadcast(winners), Seq("pcr_uuid_context"), "left")
+          .where(col("__winner").isNull || col("__winner") === col("source_file"))
+          .select(batch.columns.map(col).toSeq: _*)
+      }
+    val elemsDir = elementsPath(lakeDir)
+    val merged =
+      if (hPath(elemsDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .exists(hPath(elemsDir)))
+        KeyedOverwrite.multiKey(spark.read.schema(batch.schema).parquet(elemsDir),
+          kept, Seq("source_file", "pcr_uuid_context"))
+      else kept
+    writeMergedLakeUnlocked(spark, merged, lakeDir)
+    kept
+  }
+
   def ingestDirectory(
       spark: SparkSession,
       xmlGlob: String,
       lakeDir: String,
       idGen: XmlFlatten.IdGen = XmlFlatten.DeterministicId,
       schemaVersionId: Option[Int] = Some(1)): Result = {
-
-    recoverLake(spark, lakeDir)
 
     // ONE parse pass: (file, md5, elements) cached, statuses and the
     // tall table both derive from it (parsing twice would double the
@@ -124,40 +174,27 @@ object IngestPipeline {
         (p, md5, XmlFlatten.parse(bytes, p, md5, idGen))
       }
       .persist()
-    val statuses = parsed.map { case (p, m, es) => (p, m, es.size.toLong) }.collect()
+    val statuses = parsed.map { case (p, m, es) =>
+      (p, m, es.size.toLong, es.flatMap(_.pcr_uuid_context).distinct)
+    }.collect()
     val ok = statuses.filter(_._3 > 0)
     val bad = statuses.filter(_._3 == 0)
     val tall = parsed.flatMap(_._3).toDF()
 
-    val elemsDir = elementsPath(lakeDir)
-    val hasExisting = {
-      val p = new org.apache.hadoop.fs.Path(elemsDir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
-    val merged =
-      if (hasExisting) {
-        // Idempotent keyed overwrite (A15): evict rows of re-ingested PCRs,
-        // and rows of replayed files (container elements like the document
-        // root carry no PCR context; without the file-level eviction a
-        // same-file replay would duplicate them — the reference actually
-        // does accumulate such rows, but with fresh uuid4 ids; our
-        // deterministic ids make the file-level replace both safe and
-        // strictly more idempotent).
-        val existing = spark.read.schema(tall.schema).parquet(elemsDir)
-        KeyedOverwrite.multiKey(existing, tall, Seq("source_file", "pcr_uuid_context"))
-      } else tall
-
-    writeMergedLake(spark, merged, lakeDir)
+    commitBatch(spark, tall,
+      statuses.flatMap { case (p, _, _, pcrs) => pcrs.map(_ -> p) }, lakeDir)
     parsed.unpersist()
+
+    val elemsDir = elementsPath(lakeDir)
 
     TagTables.fkEdges(spark.read.parquet(elemsDir))
       .write.mode(SaveMode.Overwrite).parquet(fkEdgesPath(lakeDir))
 
     val now = new Timestamp(System.currentTimeMillis())
-    val auditRows = ok.map { case (p, m, _) =>
+    val auditRows = ok.map { case (p, m, _, _) =>
       Audit.AuditRow(XmlFlatten.DeterministicId.id(p, -1),
         p, m, now, Audit.Status.Staged, schemaVersionId)
-    } ++ bad.map { case (p, m, _) =>
+    } ++ bad.map { case (p, m, _, _) =>
       Audit.AuditRow(XmlFlatten.DeterministicId.id(p, -1),
         p, m, now, Audit.Status.ErrorParsingEmpty, schemaVersionId)
     }
@@ -200,25 +237,15 @@ object IngestPipeline {
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[ElementRecord], _: Long) =>
-        // same crash-safe tmp+swap as the batch path: a plain dynamic
-        // partition overwrite would leave a tag partition untouched
-        // when the merge evicted ALL of its rows, resurrecting them
         val df = batch.toDF().localCheckpoint(true)
-        val ss = df.sparkSession
-        recoverLake(ss, lakeDir)
-        val elemsDir = elementsPath(lakeDir)
-        val p = new org.apache.hadoop.fs.Path(elemsDir)
-        val exists = p.getFileSystem(ss.sparkContext.hadoopConfiguration).exists(p)
-        val merged =
-          if (exists) KeyedOverwrite.multiKey(
-            ss.read.schema(df.schema).parquet(elemsDir), df,
-            Seq("source_file", "pcr_uuid_context"))
-          else df
-        writeMergedLake(ss, merged, lakeDir)
+        val pcrFiles = df.where(col("pcr_uuid_context").isNotNull)
+          .select("pcr_uuid_context", "source_file").distinct().collect()
+          .map(r => (r.getString(0), r.getString(1)))
+        val kept = commitBatch(df.sparkSession, df, pcrFiles, lakeDir)
         // optional relational mirror per micro-batch (A12-A17): safe to
         // run next to a concurrent backfill — per-batch staging names
         // and the batch-local column cache exist for exactly this
-        mirror.foreach(cfg => JdbcMirror.mirrorBatch(df, cfg))
+        mirror.foreach(cfg => JdbcMirror.mirrorBatch(kept, cfg))
         ()
       }
   }

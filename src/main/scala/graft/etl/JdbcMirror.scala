@@ -2,10 +2,11 @@ package graft.etl
 
 import java.sql.{Connection, DriverManager, PreparedStatement, SQLException, Types}
 import java.util.Properties
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
+
+import graft.JobPhase
 
 /** JDBC relational mirror (SURVEY A12-A17, A19, A23): lands the tall
   * element table as one wide all-TEXT table per tag in an RDBMS, with
@@ -351,16 +352,6 @@ object JdbcMirror {
     }
   }
 
-  /** Runs `body` with `description` as the Spark job description of the
-    * calling thread, then restores the caller's. The job group is left
-    * alone: callers attribute jobs by it.
-    */
-  private def phase[A](sc: SparkContext, description: String)(body: => A): A = {
-    val prior = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(description)
-    try body finally sc.setJobDescription(prior)
-  }
-
   /** Mirror one ingest batch. Returns the set of mirrored table names.
     *
     * The number of Spark jobs is fixed, whatever the number of tag
@@ -373,7 +364,7 @@ object JdbcMirror {
     if (cfg.dialect == DerbyDialect) registerDerbyDialect
     val sc = tall.sparkSession.sparkContext
     val cache: ColumnCache = mutable.Map.empty // batch-local (A14)
-    val info = phase(sc, "mirror: plan")(TagTables.tableInfo(tall))
+    val info = JobPhase(sc, "mirror: plan")(TagTables.tableInfo(tall))
     val tables = info.keySet
 
     // Bootstrap + schema-version gate run FIRST, before any staging
@@ -413,7 +404,7 @@ object JdbcMirror {
       .select(lower(col("table_name")).as("t"), col("element_id").as("k"))
     val (inlineProbe, containerProbe) =
       if (preexisting.isEmpty) (Seq.empty[String], Array.empty[Row])
-      else phase(sc, "mirror: plan") {
+      else JobPhase(sc, "mirror: plan") {
         (distinctKeys.limit(cfg.maxInlineDeleteKeys + 1).collect().map(_.getString(0)).toSeq,
           containers.limit(cfg.maxInlineDeleteKeys + 1).collect())
       }
@@ -440,14 +431,14 @@ object JdbcMirror {
     val kType = if (cfg.dialect == DerbyDialect) "VARCHAR(64)" else cfg.dialect.keyTextType
 
     val created = try {
-      if (useStaging) phase(sc, "mirror: plan") {
+      if (useStaging) JobPhase(sc, "mirror: plan") {
         val conn0 = connect(cfg)
         try exec(conn0, s"CREATE TABLE ${q(cfg.schema)}.${q(keyStaging)} (${q("k")} $kType NOT NULL)")
         finally conn0.close()
         distinctKeys.toDF("k").write.mode(SaveMode.Append)
           .jdbc(cfg.url, s"${q(cfg.schema)}.${q(keyStaging)}", props)
       }
-      if (useContainerStaging) phase(sc, "mirror: plan") {
+      if (useContainerStaging) JobPhase(sc, "mirror: plan") {
         val conn0 = connect(cfg)
         try exec(conn0, s"CREATE TABLE ${q(cfg.schema)}.${q(containerStaging)} " +
           s"(${q("t")} $kType NOT NULL, ${q("k")} $kType NOT NULL)")
@@ -519,9 +510,9 @@ object JdbcMirror {
       }).zipWithIndex.toMap
       val columns = tables.map(t => t -> TagTables.wideColumns(t, info(t).attributes)).toMap
       val pcr = col("pcr_uuid_context")
-      phase(sc, "mirror: containers")(
+      JobPhase(sc, "mirror: containers")(
         appendRows(tall.where(pcr.isNull), col("source_file"), rank, columns, cfg))
-      phase(sc, "mirror: rows")(appendRows(tall.where(pcr.isNotNull), pcr, rank, columns, cfg))
+      JobPhase(sc, "mirror: rows")(appendRows(tall.where(pcr.isNotNull), pcr, rank, columns, cfg))
     }
 
     // A18/A19: FK edges with truncation-safe names, created once. Names

@@ -1,7 +1,7 @@
 package graft.etl
 
 import java.security.MessageDigest
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Distributed XML scan (SURVEY A1/A9): `binaryFile` source -> one parse
   * task per file -> tall element-record DataFrame.
@@ -20,42 +20,21 @@ object NemsisXmlReader {
 
   /** Read every XML file under `path` (glob ok) into the tall element
     * DataFrame — one row per XML element, schema = ElementRecord.
-    * Files that fail to parse contribute zero rows (route them to the
-    * error flow via [[fileStatuses]]).
+    * Files that fail to parse contribute zero rows; the ingest
+    * ([[IngestPipeline.ingestDirectory]]) routes them to the error flow
+    * from the same parse pass.
     */
   def readTall(
       spark: SparkSession,
       path: String,
       idGen: XmlFlatten.IdGen = XmlFlatten.DeterministicId): DataFrame = {
     import spark.implicits._
-    binaryFiles(spark, path)
+    spark.read.format("binaryFile").load(path)
+      .select("path", "content")
+      .as[(String, Array[Byte])]
       .flatMap { case (p, bytes) =>
         XmlFlatten.parse(bytes, p, md5Hex(bytes), idGen)
       }
       .toDF()
-  }
-
-  /** Per-file parse outcome: (source_file, file_md5, n_elements).
-    * n_elements == 0 -> parse failure or empty document; the reference
-    * logs `Error_Parsing_Empty` and quarantines (`main_ingest.py:386-397`).
-    */
-  def fileStatuses(
-      spark: SparkSession,
-      path: String,
-      idGen: XmlFlatten.IdGen = XmlFlatten.DeterministicId): DataFrame = {
-    import spark.implicits._
-    binaryFiles(spark, path)
-      .map { case (p, bytes) =>
-        (p, md5Hex(bytes), XmlFlatten.parse(bytes, p, md5Hex(bytes), idGen).size.toLong)
-      }
-      .toDF("source_file", "file_md5", "n_elements")
-  }
-
-  private def binaryFiles(
-      spark: SparkSession, path: String): Dataset[(String, Array[Byte])] = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(path)
-      .select("path", "content")
-      .as[(String, Array[Byte])]
   }
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.JobPhase
+
 /** Distributed suffix-array construction by PREFIX DOUBLING
   * (Manber–Myers, SIAM J. Comput. 1993) — the primitive behind exact
   * substring-level dedup at corpus scale (Lee et al. 2022 build suffix
@@ -152,22 +154,6 @@ object SuffixArray {
   // ------------------------------------------------------------------
   // shared plumbing
   // ------------------------------------------------------------------
-
-  /** Scoped stage timer behind the SUFFIX_DEBUG env var: one instance
-    * per logical pass, a no-op (no clock reads beyond construction)
-    * when the var is unset. Replaces the per-method `tick` closures so
-    * every debug line carries its scope.
-    */
-  private final class Ticker(scope: String) {
-    private val dbg = sys.env.contains("SUFFIX_DEBUG")
-    private var t0 = System.nanoTime()
-    def apply(what: String): Unit = if (dbg) {
-      val t1 = System.nanoTime()
-      System.err.println(
-        f"SUFFIX_DEBUG $scope $what ${(t1 - t0) / 1e9}%.2f s")
-      t0 = t1
-    }
-  }
 
   private def tagCols(df: DataFrame): Seq[Column] =
     if (df.columns.contains("tag")) Seq(col("tag")) else Nil
@@ -337,18 +323,20 @@ object SuffixArray {
     import spark.implicits._
     val par = spark.sparkContext.defaultParallelism
     val rangeCols = (col("gid") +: keyCols.map(col)) :+ col("pos")
-    val tick = new Ticker(s"denseRank(${keyCols.size} keys)")
-    val ranged = df.repartitionByRange(par, rangeCols: _*)
-      .withColumn("__part", spark_partition_id())
-      .localCheckpoint(true) // pins partition ids for the stats pass
-    tick("range+ckpt")
+    val phase = s"denseRank(${keyCols.size} keys)"
+    val ranged = JobPhase(spark.sparkContext, s"$phase range+ckpt") {
+      df.repartitionByRange(par, rangeCols: _*)
+        .withColumn("__part", spark_partition_id())
+        .localCheckpoint(true) // pins partition ids for the stats pass
+    }
     val keyStruct = struct(col("gid") +: keyCols.map(col): _*)
     // bounded driver state: one (nd, min, max) row per range partition
-    val stats = ranged.groupBy("__part")
-      .agg(countDistinct(keyStruct).as("nd"),
-        min(keyStruct).as("mn"), max(keyStruct).as("mx"))
-      .collect().sortBy(_.getInt(0))
-    tick("stats")
+    val stats = JobPhase(spark.sparkContext, s"$phase stats") {
+      ranged.groupBy("__part")
+        .agg(countDistinct(keyStruct).as("nd"),
+          min(keyStruct).as("mn"), max(keyStruct).as("mx"))
+        .collect()
+    }.sortBy(_.getInt(0))
     var u = 0L // distinct keys in ranges processed so far
     var prevMax: Row = null
     val offs = stats.map { s =>
@@ -438,21 +426,20 @@ object SuffixArray {
     */
   private def ranksLoop(codes: DataFrame, maxLen: Long, maxRounds: Int,
       ops: RankOps): DataFrame = {
-    val tick = new Ticker(s"ranksLoop(k0=${ops.k0})")
-    var r = ops.rank0(ops.gram(codes)).localCheckpoint(true)
-    tick("rank0")
+    val sc = codes.sparkSession.sparkContext
+    val phase = s"ranksLoop(k0=${ops.k0})"
+    var r = JobPhase(sc, s"$phase rank0") {
+      ops.rank0(ops.gram(codes)).localCheckpoint(true)
+    }
     var h = ops.k0.toLong
     var rounds = 0
-    var done = allUnique(r)
-    tick("allUnique")
+    var done = JobPhase(sc, s"$phase allUnique")(allUnique(r))
     while (!done && h < maxLen) {
       require(rounds < maxRounds,
         s"suffix ranking did not converge in $maxRounds rounds " +
           s"(maxLen=$maxLen) — corpus shape unexpected, refusing to spin")
-      r = ops.refine(r, h).localCheckpoint(true)
-      tick(s"refine h=$h")
-      done = allUnique(r)
-      tick("allUnique")
+      r = JobPhase(sc, s"$phase refine h=$h")(ops.refine(r, h).localCheckpoint(true))
+      done = JobPhase(sc, s"$phase allUnique")(allUnique(r))
       h *= ops.fan
       rounds += 1
     }
@@ -572,9 +559,8 @@ object SuffixArray {
     * round-0 gram columns).
     */
   private def maxRepeatImpl(codes: DataFrame, maxRounds: Int,
-      cross: Boolean,
-      giantThreshold: Long = GiantGroupThreshold,
-      tieMassBudget: Long = TieMassBudget): DataFrame = {
+      cross: Boolean, giantThreshold: Long, tieMassBudget: Long,
+      tag: String => Unit): DataFrame = {
     // the repeat search starts from a 16-char round-0 key, TWICE the
     // ranking loop's 8: cross-doc 8-gram collisions are ubiquitous on
     // natural text (every common word), so an 8-char level-0 leaves
@@ -586,7 +572,7 @@ object SuffixArray {
     val k0 = RK0.toLong
     val spark = codes.sparkSession
     val hasTag = codes.columns.contains("tag")
-    val tick = new Ticker(if (cross) "repeat(cross)" else "repeat(within)")
+    tag("gram+rank0")
 
     // round 0: per-group 16-gram + STABLE rank() — the only
     // group-bounded window passes in the whole search (one sort each,
@@ -658,7 +644,7 @@ object SuffixArray {
     }
     var ranks = r0giant.fold(r0small)(r0small.unionByName(_))
       .localCheckpoint(true)
-    tick("gram+rank0")
+    tag("ties0+exists0")
 
     /** ONE aggregation per level over the rank relation (round 14):
       * the former `tiesOf` + `existsOver` pair aggregated the SAME
@@ -737,7 +723,6 @@ object SuffixArray {
     }
     var aliveG = allGids.filterNot(state.contains)
     ties = aliveFilter(ties, aliveG)
-    tick("ties0+exists0")
     // TIE-MASS BUDGET (the last measured cliff, guarded): the loop
     // below costs ∝ (this mass) × (levels a class survives), and on
     // repeat-dense corpora cross-copy classes survive MANY levels —
@@ -747,8 +732,8 @@ object SuffixArray {
     // BEFORE the loop can silently burn hours — the
     // prefixFilterPairs / containmentPairs refusal discipline.
     if (aliveG.nonEmpty) {
+      tag("tie-mass guard")
       val tieMass = ties.count()
-      tick("tie-mass guard")
       if (tieMass > tieMassBudget) {
         val op = if (cross) "crossDocRepeats" else "longestRepeatedSubstring"
         throw new IllegalStateException(
@@ -775,6 +760,7 @@ object SuffixArray {
       require(rounds < maxRounds,
         s"repeat search did not converge in $maxRounds rounds — " +
           "corpus shape unexpected, refusing to spin")
+      tag(s"refine h=$h (ties)")
       // components r_h at +h/+2h/+3h for TIE rows only, fetched by
       // one equi-join against the full stable rank relation
       val targets = ties.select(col("gid"), col("pos"),
@@ -803,13 +789,12 @@ object SuffixArray {
       val renum = refined
         .withColumn("nr", col("rank") + rank().over(wc).cast("long") - 1L)
         .localCheckpoint(true)
-      tick(s"refine h=$h (ties)")
+      tag(s"exists h=$h")
       val (tieClsN, tiesNextRaw) = tieScan(
         renum.select(Seq(col("gid"), col("pos"),
           col("nr").as("rank")) ++ tagCols(renum): _*))
       val tiesNext = tiesNextRaw.localCheckpoint(true)
       val eN = existsFrom(tieClsN).toMap
-      tick(s"exists h=$h")
       // a died group's repeat is in [h, 4h): its rows KEEP their
       // level-h ranks (only survivors' tie rows advance below), so
       // the final relation holds every group at its own frozen level
@@ -818,6 +803,7 @@ object SuffixArray {
       if (died.nonEmpty) candParts += aliveFilter(ties, died)
       aliveG = aliveG.filter(g => eN.getOrElse(g, false))
       if (aliveG.nonEmpty) {
+        tag(s"update h=$h")
         val upd = aliveFilter(renum, aliveG)
           .select(col("gid"), col("pos"), col("nr"))
         ranks = ranks.join(upd, Seq("gid", "pos"), "left")
@@ -826,11 +812,11 @@ object SuffixArray {
             tagCols(ranks): _*)
           .localCheckpoint(true)
         ties = aliveFilter(tiesNext, aliveG)
-        tick(s"update h=$h")
       }
       h *= 4
       rounds += 1
     }
+    tag("cand init")
     val frozen = ranks
     val nullTag: Column =
       if (hasTag) lit(null).cast(frozen.schema("tag").dataType)
@@ -880,7 +866,6 @@ object SuffixArray {
     var cand0 = realOnly(g8).join(h0Df, Seq("gid"), "left_semi")
       .localCheckpoint(true)
     var candVolume = candH.count() + cand0.count()
-    tick("cand init")
 
     /** Candidate rows keyed at each group's probed `mid`s: (gid, pos,
       * mid, key[, tag]) — keys are level-h rank components (≤ 3
@@ -953,6 +938,7 @@ object SuffixArray {
     // lo ≤ m*), so the expensive frozen-level class mass is touched
     // by at most one pass
     while (state.values.exists { case (_, lo, hi) => hi - lo > 1 }) {
+      tag("search pass")
       val act = state.toSeq.collect {
         case (g, (gh, lo, hi)) if hi - lo > 1 =>
           val mids = Seq((3 * lo + hi) / 4, (lo + hi) / 2, (lo + 3 * hi) / 4)
@@ -970,7 +956,6 @@ object SuffixArray {
         .collect().map(r =>
           (r.get(0), r.getLong(1)) -> (!r.isNullAt(2) && r.getBoolean(2)))
         .toMap
-      tick("search pass")
       val loRaised = scala.collection.mutable.ListBuffer.empty[(Any, Long)]
       act.foreach { case (g, gh, ms) =>
         val (_, lo0, hi0) = state(g)
@@ -984,6 +969,7 @@ object SuffixArray {
         if (lo > lo0) loRaised += ((g, lo))
       }
       if (doShrink && loRaised.nonEmpty) {
+        tag("shrink")
         val loDf = broadcast(localGids(
           loRaised.toSeq.map { case (g, l) => Seq(g, l) }, "mid"))
         // checkpointed: consumed by BOTH shrink joins, and a lazy
@@ -1003,7 +989,6 @@ object SuffixArray {
         candH = shrink(candH)
         cand0 = shrink(cand0)
         candVolume = candH.count() + cand0.count()
-        tick("shrink")
       }
     }
 
@@ -1030,7 +1015,10 @@ object SuffixArray {
   private def maxRepeat(codes: DataFrame, maxRounds: Int,
       cross: Boolean, giantThreshold: Long,
       tieMassBudget: Long): DataFrame =
-    maxRepeatImpl(codes, maxRounds, cross, giantThreshold, tieMassBudget)
+    JobPhase.scoped(codes.sparkSession.sparkContext,
+        if (cross) "repeat(cross)" else "repeat(within)") { tag =>
+      maxRepeatImpl(codes, maxRounds, cross, giantThreshold, tieMassBudget, tag)
+    }
 
   // ------------------------------------------------------------------
   // applications
@@ -1073,7 +1061,7 @@ object SuffixArray {
           posexplode(split(col("text"), "")).as(Seq("p0", "ch")))
         .select(col("gid"), (col("p0") + 1).as("pos"),
           ascii(col("ch")).as("c0"))
-      val rep = maxRepeatImpl(codes, maxRounds, cross = false,
+      val rep = maxRepeat(codes, maxRounds, cross = false,
         giantThreshold, tieMassBudget)
       val giant = giantDocs
         .join(rep.withColumnRenamed("gid", "doc_id"), Seq("doc_id"))

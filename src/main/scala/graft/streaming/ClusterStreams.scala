@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType,
-  StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
+  StructField, StructType}
 
 import graft.ops.Dedup
 
@@ -25,49 +25,34 @@ import graft.ops.Dedup
   *     id — never a full label rewrite, so state writes are ∝ the
   *     batch's touched components.
   *
-  * Layout is the house per-batch-id idempotent scheme ([[SearchStreams]]
-  * / [[GraphStreams]]): `bands/batch_id=N` + `labels/batch_id=N` under
-  * one `commits/batch_id=N` marker written LAST — a reader racing a
-  * mid-commit batch sees none of it, and a replayed batch overwrites
-  * its own dirs before re-committing.
+  * Both relations, `bands` and `labels`, commit under one marker
+  * through the [[StreamStateDirs]] protocol (partials first, marker
+  * last; a replayed batch overwrites its own dirs before re-committing).
   *
   * The label merge rule is LATEST-WINS per id (row_number over
   * batch_id desc): a later delta supersedes an earlier label, which is
-  * exactly the d17 update semantics. [[compact]] folds the effective
-  * partitions into one base holding the merged view; base + originals
-  * coexisting mid-compaction is safe because the base's content IS the
-  * latest-wins fold of the originals (coexistence changes no winner —
-  * the [[GraphStreams.compact]] invariance argument, with fold =
-  * latest-wins instead of MIN).
+  * exactly the d17 update semantics. Bands append.
   *
   * Contract (d16's): ids are unique across the stream (exact-dedup
   * upstream — [[PipelineStreams]]'s settle stage provides it);
   * [[loadLabels]] is spec-pinned equal to the BATCH clustering
   * (`connectedComponents(minHashCandidatePairs(union))`) over all
-  * committed batches, at every prefix of the stream.
-  *
-  * State-dir ↔ checkpoint-lineage contract (all per-batch-id modules
-  * share it, stated here because compaction makes the failure
-  * sharper): one state dir belongs to ONE streaming checkpoint
-  * lineage. Restarts must reuse the checkpoint, so batch ids continue
-  * monotonically; pointing a FRESH checkpoint at existing state
-  * restarts ids at 0 — overwriting committed partitions, and, after a
-  * compaction, colliding with the base marker's `covers` list (the
-  * reused id reads as superseded). Deterministic and loud in specs,
-  * silent data loss in production — hence the contract.
+  * committed batches, at every prefix of the stream. One state dir
+  * belongs to one checkpoint lineage ([[StreamStateDirs]]).
   */
 object ClusterStreams {
 
-  private def bandSchema = StructType(Seq(
-    StructField("id", LongType), StructField("band_idx", IntegerType),
-    StructField("band_key", StringType), StructField("batch_id", LongType)))
-  private def labelSchema = StructType(Seq(
-    StructField("id", LongType), StructField("label", LongType),
-    StructField("batch_id", LongType)))
-  private def commitSchema = StructType(Seq(
-    StructField("n", LongType),
-    StructField("covers", ArrayType(LongType)),
-    StructField("batch_id", LongType)))
+  private[streaming] val layout = StreamStateDirs.Layout("commits", Seq(
+    StreamStateDirs.Relation("labels", StructType(Seq(
+      StructField("id", LongType), StructField("label", LongType))),
+      _.withColumn("__rn", row_number().over(
+          Window.partitionBy(col("id")).orderBy(col("batch_id").desc)))
+        .where(col("__rn") === 1)
+        .select("id", "label")),
+    StreamStateDirs.Relation("bands", StructType(Seq(
+      StructField("id", LongType), StructField("band_idx", IntegerType),
+      StructField("band_key", StringType))),
+      StreamStateDirs.append)))
 
   /** Start cluster maintenance over a stream of documents
     * (idCol long, textCol string). Null texts carry no shingles and
@@ -114,29 +99,8 @@ object ClusterStreams {
         Seq("id"), "left")
       .where(col("__old").isNull || col("__old") =!= col("label"))
       .select(col("id"), col("label"))
-    delta.write.mode("overwrite")
-      .parquet(s"$stateDir/labels/batch_id=$batchId")
-    Dedup.bandKeys(b, idCol, textCol)
-      .select("id", "band_idx", "band_key")
-      .write.mode("overwrite")
-      .parquet(s"$stateDir/bands/batch_id=$batchId")
-    // marker LAST: the batch exists iff its commit row does
-    import spark.implicits._
-    Seq(Tuple1(0L)).toDF("n")
-      .write.mode("overwrite")
-      .parquet(s"$stateDir/commits/batch_id=$batchId")
-    ()
-  }
-
-  private[streaming] def committedAndCovered(spark: SparkSession,
-      stateDir: String): (IndexedSeq[Long], IndexedSeq[Long]) = {
-    val rows = PipelineStreams
-      .readOrEmpty(spark, s"$stateDir/commits", commitSchema)
-      .select("batch_id", "covers").collect()
-    val all = rows.map(_.getLong(0)).toSet
-    val covered = rows.iterator.filterNot(_.isNullAt(1))
-      .flatMap(_.getSeq[Long](1)).toSet
-    ((all -- covered).toIndexedSeq.sorted, covered.toIndexedSeq.sorted)
+    layout.commit(spark, stateDir, batchId, Seq(delta,
+      Dedup.bandKeys(b, idCol, textCol).select("id", "band_idx", "band_key")))
   }
 
   /** The persisted band index over every committed batch — the
@@ -146,12 +110,8 @@ object ClusterStreams {
     loadBandsBelow(spark, stateDir, Long.MaxValue)
 
   private[streaming] def loadBandsBelow(spark: SparkSession,
-      stateDir: String, below: Long): DataFrame = {
-    val committed = committedAndCovered(spark, stateDir)._1.filter(_ < below)
-    PipelineStreams.readOrEmpty(spark, s"$stateDir/bands", bandSchema)
-      .where(col("batch_id").isin(committed: _*))
-      .select("id", "band_idx", "band_key")
-  }
+      stateDir: String, below: Long): DataFrame =
+    layout.load(spark, stateDir, "bands", below)
 
   /** The current label relation: latest committed delta wins per id.
     * Spec-pinned equal to the batch clustering over the union of all
@@ -161,63 +121,12 @@ object ClusterStreams {
     loadLabelsBelow(spark, stateDir, Long.MaxValue)
 
   private[streaming] def loadLabelsBelow(spark: SparkSession,
-      stateDir: String, below: Long): DataFrame = {
-    val committed = committedAndCovered(spark, stateDir)._1.filter(_ < below)
-    val w = Window.partitionBy(col("id")).orderBy(col("batch_id").desc)
-    PipelineStreams.readOrEmpty(spark, s"$stateDir/labels", labelSchema)
-      .where(col("batch_id").isin(committed: _*))
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .select("id", "label")
-  }
+      stateDir: String, below: Long): DataFrame =
+    layout.load(spark, stateDir, "labels", below)
 
-  /** Fold the effective partitions of BOTH state relations into one
-    * base partition (bands: a plain distinct union — append-only, so
-    * coexistence is trivially safe; labels: the latest-wins fold —
-    * coexistence safe because the fold IS what a reader computes).
-    * Crash-replay safe via the [[GraphStreams.compact]] protocol:
-    * deterministic negative base id, covering marker last, old markers
-    * deleted before old data.
+  /** Fold the effective partitions of both relations into one base
+    * partition ([[StreamStateDirs.Layout.compact]]).
     */
-  def compact(spark: SparkSession, stateDir: String): Unit = {
-    val (effective, covered) = committedAndCovered(spark, stateDir)
-    covered.foreach { id =>
-      StreamStateDirs.delete(spark, s"$stateDir/commits/batch_id=$id")
-      StreamStateDirs.delete(spark, s"$stateDir/labels/batch_id=$id")
-      StreamStateDirs.delete(spark, s"$stateDir/bands/batch_id=$id")
-    }
-    if (effective.size <= 1) return
-    val base = math.min(effective.min, 0L) - 1L
-    val w = Window.partitionBy(col("id")).orderBy(col("batch_id").desc)
-    // eager checkpoints: the folds must materialize before writing
-    // under the same roots they read
-    val foldedLabels = PipelineStreams
-      .readOrEmpty(spark, s"$stateDir/labels", labelSchema)
-      .where(col("batch_id").isin(effective: _*))
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .select("id", "label")
-      .localCheckpoint(true)
-    val foldedBands = PipelineStreams
-      .readOrEmpty(spark, s"$stateDir/bands", bandSchema)
-      .where(col("batch_id").isin(effective: _*))
-      .select("id", "band_idx", "band_key").distinct()
-      .localCheckpoint(true)
-    try {
-      foldedLabels.write.mode("overwrite")
-        .parquet(s"$stateDir/labels/batch_id=$base")
-      foldedBands.write.mode("overwrite")
-        .parquet(s"$stateDir/bands/batch_id=$base")
-      import spark.implicits._
-      Seq((foldedLabels.count(), effective))
-        .toDF("n", "covers")
-        .write.mode("overwrite")
-        .parquet(s"$stateDir/commits/batch_id=$base")
-    } finally { foldedLabels.unpersist(); foldedBands.unpersist(); () }
-    effective.foreach { id =>
-      StreamStateDirs.delete(spark, s"$stateDir/commits/batch_id=$id")
-      StreamStateDirs.delete(spark, s"$stateDir/labels/batch_id=$id")
-      StreamStateDirs.delete(spark, s"$stateDir/bands/batch_id=$id")
-    }
-  }
+  def compact(spark: SparkSession, stateDir: String): Unit =
+    layout.compact(spark, stateDir)
 }

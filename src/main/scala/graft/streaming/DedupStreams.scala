@@ -253,35 +253,27 @@ object DedupStreams {
   // --------------------------------------------------------------
 
   import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.types.{ArrayType, LongType, StringType,
-    StructField, StructType}
+  import org.apache.spark.sql.types.{LongType, StringType, StructField,
+    StructType}
 
-  private def cdcChunksSchema = StructType(Seq(
-    StructField("source", StringType), StructField("h", StringType),
-    StructField("cnt", LongType), StructField("len", LongType),
-    StructField("batch_id", LongType)))
-  // `covers` marks a COMPACTED base partition superseding the listed
-  // batch ids (the [[SearchStreams]] discipline); normal stream
-  // batches leave it null
-  private def cdcMarksSchema = StructType(Seq(
-    StructField("covers", ArrayType(LongType)),
-    StructField("batch_id", LongType)))
+  private[streaming] val cdcLayout = StreamStateDirs.Layout("marks", Seq(
+    StreamStateDirs.Relation("chunks", StructType(Seq(
+      StructField("source", StringType), StructField("h", StringType),
+      StructField("cnt", LongType), StructField("len", LongType))),
+      StreamStateDirs.keyed("source", "h")(
+        sum("cnt").as("cnt"), min("len").as("len")))))
 
   /** Streaming maintenance of the content-defined-chunk index
     * (d27/d28's state — [[graft.ops.Dedup.cdcChunkIndex]]): each
     * micro-batch of landing documents is chunked ONCE and its
-    * per-(source, chunk-hash) (cnt, len) partial lands under
-    * `indexDir/chunks/batch_id=N`, then a 1-row marker under
-    * `indexDir/marks/batch_id=N` — the marker is written LAST, so a
-    * batch is committed iff its marker exists and a reader racing a
-    * mid-commit batch sees none of it. Retried batches overwrite
-    * their own partitions (idempotent replay). [[loadCdcChunkIndex]]
-    * merges committed partials with d28's algebra (counts add,
-    * lengths min — content-determined, so min is a no-op across
-    * sides); [[compactCdcChunkIndex]] folds them into one base
-    * partition with a covers-marker flip, the fourth incremental
-    * index family on the same operational story as t15 (BM25), d33
-    * (winnow) and the member states.
+    * per-(source, chunk-hash) (cnt, len) partial commits under
+    * `indexDir` through the [[StreamStateDirs]] marker protocol.
+    * [[loadCdcChunkIndex]] merges committed partials with d28's
+    * algebra (counts add, lengths min — content-determined, so min is
+    * a no-op across sides); [[compactCdcChunkIndex]] folds them into
+    * one base partition: the fourth incremental index family on the
+    * same operational story as t15 (BM25), d33 (winnow) and the member
+    * states.
     *
     * `w`/`divisor` default to the shared batch constants
     * ([[graft.ops.Dedup.CdcW]]/[[graft.ops.Dedup.CdcDivisor]]) so the
@@ -295,100 +287,47 @@ object DedupStreams {
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        Dedup.cdcChunkIndex(batch, w, divisor)
-          .write.mode("overwrite")
-          .parquet(s"$indexDir/chunks/batch_id=$batchId")
-        val spark = batch.sparkSession
-        import spark.implicits._
-        // marker LAST: the commit point
-        Seq(Tuple1(null.asInstanceOf[Array[Long]])).toDF("covers")
-          .write.mode("overwrite")
-          .parquet(s"$indexDir/marks/batch_id=$batchId")
+        cdcLayout.commit(batch.sparkSession, indexDir, batchId,
+          Seq(Dedup.cdcChunkIndex(batch, w, divisor)))
       }
       .start()
 
-  /** The full chunk index from the partial layout: committed batches
-    * (marker present, not superseded by a compaction base) merged by
-    * the d28 algebra. Empty before the first commit, never an error.
+  /** The full chunk index: committed batches merged by the d28
+    * algebra. Empty before the first commit, never an error.
     */
-  def loadCdcChunkIndex(spark: SparkSession, indexDir: String): DataFrame = {
-    val marks = PipelineStreams
-      .readOrEmpty(spark, s"$indexDir/marks", cdcMarksSchema)
-      .select("batch_id", "covers").collect() // one row per batch ever
-    val covered = marks.iterator.filterNot(_.isNullAt(1))
-      .flatMap(_.getSeq[Long](1)).toSet
-    val committed = marks.map(_.getLong(0)).filterNot(covered).toIndexedSeq
-    PipelineStreams.readOrEmpty(spark, s"$indexDir/chunks", cdcChunksSchema)
-      .where(col("batch_id").isin(committed: _*))
-      .groupBy("source", "h")
-      .agg(sum("cnt").as("cnt"), min("len").as("len"))
-  }
+  def loadCdcChunkIndex(spark: SparkSession, indexDir: String): DataFrame =
+    cdcLayout.load(spark, indexDir, "chunks")
 
-  /** Fold every committed partial into ONE base partition: write the
-    * merged chunks under a fresh base id, then flip atomically by
-    * writing the base's marker with `covers` = the superseded ids
-    * (readers exclude them the same instant the base appears), then
-    * delete the originals. A crash mid-delete leaves covered — hence
-    * invisible — partitions that the next compaction removes first.
+  /** Fold every committed partial into ONE base partition
+    * ([[StreamStateDirs.Layout.compact]]).
     */
-  def compactCdcChunkIndex(spark: SparkSession, indexDir: String): Unit = {
-    val marks = PipelineStreams
-      .readOrEmpty(spark, s"$indexDir/marks", cdcMarksSchema)
-      .select("batch_id", "covers").collect()
-    val covered = marks.iterator.filterNot(_.isNullAt(1))
-      .flatMap(_.getSeq[Long](1)).toSet
-    covered.toIndexedSeq.sorted.foreach { id =>
-      StreamStateDirs.delete(spark, s"$indexDir/marks/batch_id=$id")
-      StreamStateDirs.delete(spark, s"$indexDir/chunks/batch_id=$id")
-    }
-    val ids = marks.map(_.getLong(0)).filterNot(covered).toIndexedSeq.sorted
-    if (ids.length <= 1) return
-    val base = math.min(ids.min, 0L) - 1L
-    val folded = PipelineStreams
-      .readOrEmpty(spark, s"$indexDir/chunks", cdcChunksSchema)
-      .where(col("batch_id").isin(ids: _*))
-      .groupBy("source", "h")
-      .agg(sum("cnt").as("cnt"), min("len").as("len"))
-      .localCheckpoint(true) // materialize before writing under the read root
-    try {
-      folded.write.mode("overwrite")
-        .parquet(s"$indexDir/chunks/batch_id=$base")
-      import spark.implicits._
-      Seq(Tuple1(ids)).toDF("covers")
-        .write.mode("overwrite")
-        .parquet(s"$indexDir/marks/batch_id=$base")
-    } finally { folded.unpersist(); () }
-    ids.foreach { id =>
-      StreamStateDirs.delete(spark, s"$indexDir/marks/batch_id=$id")
-      StreamStateDirs.delete(spark, s"$indexDir/chunks/batch_id=$id")
-    }
-  }
+  def compactCdcChunkIndex(spark: SparkSession, indexDir: String): Unit =
+    cdcLayout.compact(spark, indexDir)
 
   // --------------------------------------------------------------
   // cross-span gram index stream (d36's state)
   // --------------------------------------------------------------
 
-  private def crossSpanGramsSchema = StructType(Seq(
-    StructField("source", StringType), StructField("gram", StringType),
-    StructField("n_docs", LongType), StructField("batch_id", LongType)))
+  private[streaming] val crossSpanLayout = StreamStateDirs.Layout("marks", Seq(
+    StreamStateDirs.Relation("grams", StructType(Seq(
+      StructField("source", StringType), StructField("gram", StringType),
+      StructField("n_docs", LongType))),
+      StreamStateDirs.keyed("source", "gram")(sum("n_docs").as("n_docs")))))
 
   /** Streaming maintenance of the cross-span gram index (d36's state
     * — [[graft.ops.SuffixArray.crossSpanIndex]]): each micro-batch of
     * landing documents is gram-counted ONCE and its per-(source, gram)
-    * distinct-doc partial lands under `indexDir/grams/batch_id=N`,
-    * then a 1-row marker under `indexDir/marks/batch_id=N` — marker
-    * LAST, so a batch is committed iff its marker exists and a reader
-    * racing a mid-commit batch sees none of it; retried batches
-    * overwrite their own partitions (idempotent replay). The fifth
-    * incremental index family on the same operational story as t15
-    * (BM25), d33 (winnow) and d28 (CDC). [[loadCrossSpanIndex]]
-    * sum-merges committed partials (d36's disjoint-doc algebra —
+    * distinct-doc partial commits under `indexDir` through the
+    * [[StreamStateDirs]] marker protocol. The fifth incremental index
+    * family on the same operational story as t15 (BM25), d33 (winnow)
+    * and d28 (CDC). [[loadCrossSpanIndex]] sum-merges committed
+    * partials (d36's disjoint-doc algebra —
     * [[graft.ops.SuffixArray.crossSpanIndexMerge]], spec-pinned equal
     * to the batch index); [[compactCrossSpanIndex]] folds them into
-    * one base partition with the covers-marker flip. Contract: doc
-    * ids unique across batches (each doc lands exactly once — settle
-    * with exact dedup first), or per-(source, gram) counts
-    * double-count, exactly as the batch merge states.
+    * one base partition. Contract: doc ids unique across batches (each
+    * doc lands exactly once — settle with exact dedup first), or
+    * per-(source, gram) counts double-count, exactly as the batch
+    * merge states.
     */
   def crossSpanIndexStream(docs: DataFrame, indexDir: String,
       checkpointDir: String, idCol: String = "doc_id",
@@ -399,82 +338,26 @@ object DedupStreams {
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.SuffixArray
-          .crossSpanIndex(batch, idCol, textCol, srcCol, minLen,
-            giantThreshold)
-          .write.mode("overwrite")
-          .parquet(s"$indexDir/grams/batch_id=$batchId")
-        val spark = batch.sparkSession
-        import spark.implicits._
-        // marker LAST: the commit point
-        Seq(Tuple1(null.asInstanceOf[Array[Long]])).toDF("covers")
-          .write.mode("overwrite")
-          .parquet(s"$indexDir/marks/batch_id=$batchId")
+        crossSpanLayout.commit(batch.sparkSession, indexDir, batchId, Seq(
+          graft.ops.SuffixArray.crossSpanIndex(batch, idCol, textCol, srcCol,
+            minLen, giantThreshold)))
       }
       .start()
 
-  /** The full cross-span index from the partial layout: committed
-    * batches (marker present, not superseded by a compaction base)
-    * merged by d36's sum algebra. Empty before the first commit,
-    * never an error. Feed the result to
-    * [[graft.ops.SuffixArray.crossDocSpanRemovalFromIndex]] — the
-    * re-thresholding (`n_docs >= 2`) happens there, at read, so
+  /** The full cross-span index: committed batches merged by d36's sum
+    * algebra. Empty before the first commit, never an error. Feed the
+    * result to [[graft.ops.SuffixArray.crossDocSpanRemovalFromIndex]] —
+    * the re-thresholding (`n_docs >= 2`) happens there, at read, so
     * partials keep singleton grams that a LATER batch may complete
     * into multi-doc evidence.
     */
   def loadCrossSpanIndex(spark: SparkSession, indexDir: String)
-      : DataFrame = {
-    val marks = PipelineStreams
-      .readOrEmpty(spark, s"$indexDir/marks", cdcMarksSchema)
-      .select("batch_id", "covers").collect() // one row per batch ever
-    val covered = marks.iterator.filterNot(_.isNullAt(1))
-      .flatMap(_.getSeq[Long](1)).toSet
-    val committed = marks.map(_.getLong(0)).filterNot(covered).toIndexedSeq
-    PipelineStreams
-      .readOrEmpty(spark, s"$indexDir/grams", crossSpanGramsSchema)
-      .where(col("batch_id").isin(committed: _*))
-      .groupBy("source", "gram")
-      .agg(sum("n_docs").as("n_docs"))
-  }
+      : DataFrame =
+    crossSpanLayout.load(spark, indexDir, "grams")
 
   /** Fold every committed cross-span partial into ONE base partition
-    * (the [[compactCdcChunkIndex]] flip, verbatim): merged grams
-    * under a fresh base id, the base's covers-marker written next
-    * (readers exclude the superseded ids the same instant the base
-    * appears), originals deleted last — a crash mid-delete leaves
-    * covered, hence invisible, partitions the next compaction removes
-    * first.
+    * ([[StreamStateDirs.Layout.compact]]).
     */
-  def compactCrossSpanIndex(spark: SparkSession, indexDir: String): Unit = {
-    val marks = PipelineStreams
-      .readOrEmpty(spark, s"$indexDir/marks", cdcMarksSchema)
-      .select("batch_id", "covers").collect()
-    val covered = marks.iterator.filterNot(_.isNullAt(1))
-      .flatMap(_.getSeq[Long](1)).toSet
-    covered.toIndexedSeq.sorted.foreach { id =>
-      StreamStateDirs.delete(spark, s"$indexDir/marks/batch_id=$id")
-      StreamStateDirs.delete(spark, s"$indexDir/grams/batch_id=$id")
-    }
-    val ids = marks.map(_.getLong(0)).filterNot(covered).toIndexedSeq.sorted
-    if (ids.length <= 1) return
-    val base = math.min(ids.min, 0L) - 1L
-    val folded = PipelineStreams
-      .readOrEmpty(spark, s"$indexDir/grams", crossSpanGramsSchema)
-      .where(col("batch_id").isin(ids: _*))
-      .groupBy("source", "gram")
-      .agg(sum("n_docs").as("n_docs"))
-      .localCheckpoint(true) // materialize before writing under the read root
-    try {
-      folded.write.mode("overwrite")
-        .parquet(s"$indexDir/grams/batch_id=$base")
-      import spark.implicits._
-      Seq(Tuple1(ids)).toDF("covers")
-        .write.mode("overwrite")
-        .parquet(s"$indexDir/marks/batch_id=$base")
-    } finally { folded.unpersist(); () }
-    ids.foreach { id =>
-      StreamStateDirs.delete(spark, s"$indexDir/marks/batch_id=$id")
-      StreamStateDirs.delete(spark, s"$indexDir/grams/batch_id=$id")
-    }
-  }
+  def compactCrossSpanIndex(spark: SparkSession, indexDir: String): Unit =
+    crossSpanLayout.compact(spark, indexDir)
 }

@@ -16,34 +16,27 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField,
   * of one (event type × hour) group arrive across micro-batches. What
   * IS algebraic is the MEMBER relation: (group, user) → min(ts) merges
   * by per-key MIN exactly as q42's min-state does. So each micro-batch
-  * writes its member partial under `stateDir/members/batch_id=N` (the
-  * [[SearchStreams]] per-batch-id idempotent layout; a commit marker
-  * lands LAST so a reader racing a mid-commit batch sees none of it),
-  * and [[loadEdges]] merges the partials with one min-groupBy and
-  * derives the chains with the SAME per-group lag windows as the batch
-  * operator — spec-pinned equal to `Graph.chainEdges` on the union.
+  * commits its member partial through the [[StreamStateDirs]] marker
+  * protocol, and [[loadEdges]] merges the partials with one min-groupBy
+  * and derives the chains with the SAME per-group lag windows as the
+  * batch operator — spec-pinned equal to `Graph.chainEdges` on the
+  * union.
   *
   * At 100 TB: partials are bounded by the batch's distinct
   * (group, user) pairs; the reader's merge is one map-side-combined
   * min; [[compact]] periodically folds old batch partitions into a
-  * base partition without changing any reader (spec-pinned, including
-  * mid-compaction crash points). Groups older than the event horizon
-  * stop changing, so downstream consumers (PageRank, triangles) can
-  * incrementally freeze closed hours.
+  * base partition without changing any reader. Groups older than the
+  * event horizon stop changing, so downstream consumers (PageRank,
+  * triangles) can incrementally freeze closed hours.
   */
 object GraphStreams {
 
-  private def memberSchema = StructType(Seq(
-    StructField("event_type", StringType), StructField("h", TimestampType),
-    StructField("user_id", LongType), StructField("mts", TimestampType),
-    StructField("batch_id", LongType)))
-  // `covers` marks a COMPACTED base partition: the listed batch ids are
-  // superseded by this one. Normal stream batches leave it null (old
-  // commit rows read as null under the evolved schema — same rows).
-  private def commitSchema = StructType(Seq(
-    StructField("n", LongType),
-    StructField("covers", org.apache.spark.sql.types.ArrayType(LongType)),
-    StructField("batch_id", LongType)))
+  private[streaming] val layout = StreamStateDirs.Layout("commits", Seq(
+    StreamStateDirs.Relation("members", StructType(Seq(
+      StructField("event_type", StringType), StructField("h", TimestampType),
+      StructField("user_id", LongType), StructField("mts", TimestampType))),
+      StreamStateDirs.keyed("event_type", "h", "user_id")(
+        min(col("mts")).as("mts")))))
 
   /** Start member-state maintenance over `events` (a streaming frame
     * with (event_type string, ts timestamp, user_id long)).
@@ -61,34 +54,9 @@ object GraphStreams {
           .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"),
             col("user_id"))
           .agg(min(col("ts")).as("mts"))
-        part.write.mode("overwrite")
-          .parquet(s"$stateDir/members/batch_id=$batchId")
-        // marker LAST: a batch is committed iff its commit row exists
-        val spark = batch.sparkSession
-        import spark.implicits._
-        Seq(Tuple1(0L)).toDF("n")
-          .write.mode("overwrite")
-          .parquet(s"$stateDir/commits/batch_id=$batchId")
-        ()
+        layout.commit(batch.sparkSession, stateDir, batchId, Seq(part))
       }
       .start()
-
-  /** The batch ids a reader must scan: every committed id minus every
-    * id some base partition's `covers` list supersedes. The commit
-    * relation is one row per batch ever committed — driver-sized by
-    * construction, and after compaction it collapses to ~1 row (the
-    * fix for the per-batch `isin` literal list growing unboundedly).
-    */
-  private def committedAndCovered(spark: SparkSession,
-      stateDir: String): (IndexedSeq[Long], IndexedSeq[Long]) = {
-    val rows = PipelineStreams
-      .readOrEmpty(spark, s"$stateDir/commits", commitSchema)
-      .select("batch_id", "covers").collect()
-    val all = rows.map(_.getLong(0)).toSet
-    val covered = rows.iterator.filterNot(_.isNullAt(1))
-      .flatMap(_.getSeq[Long](1)).toSet
-    ((all -- covered).toIndexedSeq.sorted, covered.toIndexedSeq.sorted)
-  }
 
   /** Merge every committed batch's member partials (per-key MIN) and
     * derive the chain edges — identical output to
@@ -96,12 +64,7 @@ object GraphStreams {
     * empty edge relation.
     */
   def loadEdges(spark: SparkSession, stateDir: String): DataFrame = {
-    val committed = committedAndCovered(spark, stateDir)._1
-    val members = PipelineStreams
-      .readOrEmpty(spark, s"$stateDir/members", memberSchema)
-      .where(col("batch_id").isin(committed: _*))
-      .groupBy("event_type", "h", "user_id")
-      .agg(min(col("mts")).as("mts"))
+    val members = layout.load(spark, stateDir, "members")
     val w = Window.partitionBy(col("event_type"), col("h"))
       .orderBy(col("mts"), col("user_id"))
     members
@@ -111,60 +74,11 @@ object GraphStreams {
       .select("src", "dst").distinct()
   }
 
-  /** Fold every effective batch partition into ONE base partition so a
-    * long-running stream's state stays a bounded file set instead of a
-    * per-micro-batch directory sprawl (the small-files death at scale).
-    * Readers are invariant at every crash point:
-    *
-    *  1. the min-merged members land under a fresh NEGATIVE batch id
-    *     (stream ids are non-negative, so no future batch collides) —
-    *     uncommitted, invisible;
-    *  2. the base's commit marker lands with `covers` = the folded ids
-    *     — the atomic flip. Until old markers are gone a reader may see
-    *     base AND originals, which is safe because per-key MIN is
-    *     IDEMPOTENT (min of mins over overlapping sets);
-    *  3. each old id's commit marker is deleted BEFORE its data, so no
-    *     id is ever committed-but-dataless.
-    *
-    * A crash anywhere replays safely: the base id derives
-    * deterministically from the effective set, so a re-run overwrites
-    * the orphan and finishes the deletes. No-op when ≤ 1 effective
-    * partition exists.
+  /** Fold every effective batch partition into ONE base partition
+    * ([[StreamStateDirs.Layout.compact]]) so a long-running stream's
+    * state stays a bounded file set instead of a per-micro-batch
+    * directory sprawl (the small-files death at scale).
     */
-  def compact(spark: SparkSession, stateDir: String): Unit = {
-    val (effective, covered) = committedAndCovered(spark, stateDir)
-    // first, finish any prior compaction's interrupted deletes: covered
-    // partitions are already invisible to readers, so removing them
-    // changes nothing a reader sees (marker first, then data — an id
-    // must never be committed-but-dataless)
-    covered.foreach { id =>
-      StreamStateDirs.delete(spark, s"$stateDir/commits/batch_id=$id")
-      StreamStateDirs.delete(spark, s"$stateDir/members/batch_id=$id")
-    }
-    if (effective.size <= 1) return
-    val base = math.min(effective.min, 0L) - 1L
-    // eager checkpoint: the fold must fully materialize BEFORE the
-    // write job creates members/batch_id=<base> under the same root it
-    // reads, or the write's own output could enter its input listing
-    val folded = PipelineStreams
-      .readOrEmpty(spark, s"$stateDir/members", memberSchema)
-      .where(col("batch_id").isin(effective: _*))
-      .groupBy("event_type", "h", "user_id")
-      .agg(min(col("mts")).as("mts"))
-      .select("event_type", "h", "user_id", "mts")
-      .localCheckpoint(true)
-    try {
-      folded.write.mode("overwrite")
-        .parquet(s"$stateDir/members/batch_id=$base")
-      import spark.implicits._
-      Seq((folded.count(), effective))
-        .toDF("n", "covers")
-        .write.mode("overwrite")
-        .parquet(s"$stateDir/commits/batch_id=$base")
-    } finally { folded.unpersist(); () }
-    effective.foreach { id =>
-      StreamStateDirs.delete(spark, s"$stateDir/commits/batch_id=$id")
-      StreamStateDirs.delete(spark, s"$stateDir/members/batch_id=$id")
-    }
-  }
+  def compact(spark: SparkSession, stateDir: String): Unit =
+    layout.compact(spark, stateDir)
 }

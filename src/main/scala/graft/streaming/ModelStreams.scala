@@ -3,8 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{ArrayType, LongType, StringType,
-  StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
 
 import graft.ops.LangModel
 import graft.ops.LangModel.BigramModel
@@ -13,10 +13,9 @@ import graft.ops.LangModel.BigramModel
   * LM's count relations ([[LangModel]], t16/t18) and the DSIR
   * bucket-count model ([[graft.ops.Curation.dsirModel]], c14): each
   * micro-batch of landing documents is counted ONCE and its per-batch
-  * count partials land under `modelDir/<rel>/batch_id=N` (the
-  * [[SearchStreams]] per-batch-id idempotent layout, commit marker
-  * written last). Readers reconstruct the full model with one
-  * term-keyed sum per relation — the q42/t15 rule: counts over
+  * count partials commit through the [[StreamStateDirs]] marker
+  * protocol (marker dir `stats`). Readers reconstruct the full model
+  * with one term-keyed sum per relation — the q42/t15 rule: counts over
   * disjoint document sets SUM, so tomorrow's model is yesterday's
   * partials + the batch's, and the corpus is never re-tokenized
   * (t18's merged == direct proof carries over batch-by-batch; the
@@ -27,28 +26,32 @@ import graft.ops.LangModel.BigramModel
   *
   * At 100 TB: partials are vocab-sized (LM) / `buckets`-sized (DSIR),
   * orders of magnitude under the batch; [[compact]] periodically folds
-  * them with the same covers protocol as [[SearchStreams.compact]]
-  * (sums must never double-count, so the flip is atomic).
+  * them into one base partition.
   */
 object ModelStreams {
 
-  private def uniSchema = StructType(Seq(
-    StructField("w1", StringType), StructField("cu", LongType),
-    StructField("batch_id", LongType)))
-  private def biSchema = StructType(Seq(
-    StructField("w1", StringType), StructField("w2", StringType),
-    StructField("cb", LongType), StructField("batch_id", LongType)))
-  private def dsirSchema = StructType(Seq(
-    StructField("__b", LongType), StructField("cr", LongType),
-    StructField("ct", LongType), StructField("batch_id", LongType)))
-  private def histSchema = StructType(Seq(
-    StructField("metric", StringType), StructField("v", LongType),
-    StructField("c", LongType), StructField("batch_id", LongType)))
-  // commit marker; `covers` marks a compacted base (see SearchStreams)
-  private def statsSchema = StructType(Seq(
-    StructField("n", LongType),
-    StructField("covers", ArrayType(LongType)),
-    StructField("batch_id", LongType)))
+  import StreamStateDirs.{Layout, Relation, keyed}
+
+  // the three layouts share the `stats` marker dir; each declares its
+  // own count relations, so compaction can never fold a partial list
+  private[streaming] val lmLayout = Layout("stats", Seq(
+    Relation("uni", StructType(Seq(
+      StructField("w1", StringType), StructField("cu", LongType))),
+      keyed("w1")(sum("cu").as("cu"))),
+    Relation("bi", StructType(Seq(
+      StructField("w1", StringType), StructField("w2", StringType),
+      StructField("cb", LongType))),
+      keyed("w1", "w2")(sum("cb").as("cb")))))
+  private[streaming] val dsirLayout = Layout("stats", Seq(
+    Relation("buckets", StructType(Seq(
+      StructField("__b", LongType), StructField("cr", LongType),
+      StructField("ct", LongType))),
+      keyed("__b")(sum("cr").as("cr"), sum("ct").as("ct")))))
+  private[streaming] val histLayout = Layout("stats", Seq(
+    Relation("hist", StructType(Seq(
+      StructField("metric", StringType), StructField("v", LongType),
+      StructField("c", LongType))),
+      keyed("metric", "v")(sum("c").as("c")))))
 
   /** Start bigram-LM model maintenance over a streaming `docs` frame
     * with a `textCol` string column: per batch, train on the batch
@@ -83,16 +86,7 @@ object ModelStreams {
   def writeLmPartials(batch: DataFrame, textCol: String, modelDir: String,
       batchId: Long): Unit = {
     val m = LangModel.train(batch, textCol)
-    m.uni.write.mode("overwrite")
-      .parquet(s"$modelDir/uni/batch_id=$batchId")
-    m.bi.write.mode("overwrite")
-      .parquet(s"$modelDir/bi/batch_id=$batchId")
-    val spark = batch.sparkSession
-    import spark.implicits._
-    Seq(Tuple1(batch.count())).toDF("n")
-      .write.mode("overwrite")
-      .parquet(s"$modelDir/stats/batch_id=$batchId")
-    ()
+    lmLayout.commit(batch.sparkSession, modelDir, batchId, Seq(m.uni, m.bi))
   }
 
   /** Start DSIR bucket-model maintenance: per batch, one tokenize pass
@@ -104,16 +98,8 @@ object ModelStreams {
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        graft.ops.Curation
-          .dsirModel(batch, textCol, col(isTargetCol), buckets)
-          .write.mode("overwrite")
-          .parquet(s"$stateDir/buckets/batch_id=$batchId")
-        val spark = batch.sparkSession
-        import spark.implicits._
-        Seq(Tuple1(0L)).toDF("n")
-          .write.mode("overwrite")
-          .parquet(s"$stateDir/stats/batch_id=$batchId")
-        ()
+        dsirLayout.commit(batch.sparkSession, stateDir, batchId, Seq(
+          graft.ops.Curation.dsirModel(batch, textCol, col(isTargetCol), buckets)))
       }
       .start()
 
@@ -136,21 +122,13 @@ object ModelStreams {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val b = batch.localCheckpoint(true) // one pass per metric
-        try {
+        try histLayout.commit(batch.sparkSession, stateDir, batchId, Seq(
           metricCols.map { m =>
             b.where(col(m).isNotNull)
               .groupBy(lit(m).as("metric"), col(m).cast("long").as("v"))
               .agg(count(lit(1)).as("c"))
-          }.reduce(_ unionByName _)
-            .write.mode("overwrite")
-            .parquet(s"$stateDir/hist/batch_id=$batchId")
-          val spark = batch.sparkSession
-          import spark.implicits._
-          Seq(Tuple1(0L)).toDF("n")
-            .write.mode("overwrite")
-            .parquet(s"$stateDir/stats/batch_id=$batchId")
-          ()
-        } finally { b.unpersist(); () }
+          }.reduce(_ unionByName _)))
+        finally { b.unpersist(); () }
       }
       .start()
   }
@@ -161,14 +139,10 @@ object ModelStreams {
     */
   def loadHistogram(spark: SparkSession, stateDir: String, metric: String,
       ascending: Boolean = true): DataFrame = {
-    val ids = effectiveIds(spark, stateDir)
-    val base = PipelineStreams.readOrEmpty(spark, s"$stateDir/hist", histSchema)
-      .where(col("batch_id").isin(ids: _*))
+    val merged = histLayout.load(spark, stateDir, "hist")
       .where(col("metric") === metric)
-    val oriented =
-      if (ascending) base.select(col("v"), col("c"))
-      else base.select((-col("v")).as("v"), col("c"))
-    oriented.groupBy("v").agg(sum("c").as("c"))
+    if (ascending) merged.select(col("v"), col("c"))
+    else merged.select((-col("v")).as("v"), col("c"))
   }
 
   /** Tile thresholds of one maintained metric, anytime: the merged
@@ -181,93 +155,32 @@ object ModelStreams {
     graft.ops.Segmentation.thresholdsFromCounts(
       loadHistogram(spark, stateDir, metric, ascending), k)
 
-  /** Committed = stats rows minus covered ids (the SearchStreams
-    * rule — the model scalars and counts are sums, never allowed to
-    * double-count).
-    */
-  private def effectiveIds(spark: SparkSession, dir: String): IndexedSeq[Long] = {
-    val rows = PipelineStreams
-      .readOrEmpty(spark, s"$dir/stats", statsSchema)
-      .select("batch_id", "covers").collect()
-    val covered = rows.iterator.filterNot(_.isNullAt(1))
-      .flatMap(_.getSeq[Long](1)).toSet
-    rows.map(_.getLong(0)).filterNot(covered).toIndexedSeq.sorted
-  }
-
   /** Reconstruct the merged [[BigramModel]]: per-key sums over every
     * committed batch's partials; V is the merged unigram relation's
     * row count (vocabularies OVERLAP across batches, so V is NOT a
     * sum — it must be counted on the merged relation).
     */
   def loadModel(spark: SparkSession, modelDir: String): BigramModel = {
-    val ids = effectiveIds(spark, modelDir)
-    def rel(name: String, schema: StructType): DataFrame =
-      PipelineStreams.readOrEmpty(spark, s"$modelDir/$name", schema)
-        .where(col("batch_id").isin(ids: _*)).drop("batch_id")
-    val uni = rel("uni", uniSchema).groupBy("w1").agg(sum("cu").as("cu"))
-      .localCheckpoint(true)
-    val bi = rel("bi", biSchema).groupBy("w1", "w2").agg(sum("cb").as("cb"))
-    BigramModel(uni, bi, uni.count())
+    val ids = lmLayout.marks(spark, modelDir).effective
+    val uni = lmLayout.read(spark, modelDir, "uni", ids).localCheckpoint(true)
+    BigramModel(uni, lmLayout.read(spark, modelDir, "bi", ids), uni.count())
   }
 
   /** Reconstruct the merged DSIR bucket model — (__b, cr, ct), ready
     * for [[graft.ops.Curation.dsirScoresWith]].
     */
-  def loadDsirModel(spark: SparkSession, stateDir: String): DataFrame = {
-    val ids = effectiveIds(spark, stateDir)
-    PipelineStreams.readOrEmpty(spark, s"$stateDir/buckets", dsirSchema)
-      .where(col("batch_id").isin(ids: _*)).drop("batch_id")
-      .groupBy("__b").agg(sum("cr").as("cr"), sum("ct").as("ct"))
-  }
+  def loadDsirModel(spark: SparkSession, stateDir: String): DataFrame =
+    dsirLayout.load(spark, stateDir, "buckets")
 
-  /** Fold every effective batch's partials into one base partition —
-    * the [[SearchStreams.compact]] protocol verbatim (sums ⇒ atomic
-    * flip via a covering stats row written last; covered partitions
-    * GC'd marker-first). `rels` names the count relations of the state
-    * dir: ("uni", "bi") for an LM dir, ("buckets") for a DSIR dir,
-    * ("hist") for a histogram dir.
+  /** Fold every effective batch's partials into one base partition
+    * ([[StreamStateDirs.Layout.compact]]). The layout (LM, DSIR or
+    * histogram) is the one whose relations exist under `dir`.
     */
-  def compact(spark: SparkSession, dir: String, rels: Seq[String]): Unit = {
-    val statRows = PipelineStreams
-      .readOrEmpty(spark, s"$dir/stats", statsSchema)
-      .select("batch_id", "n", "covers").collect()
-    val covered = statRows.iterator.filterNot(_.isNullAt(2))
-      .flatMap(_.getSeq[Long](2)).toSet
-    val effective = statRows.filterNot(r => covered.contains(r.getLong(0)))
-    covered.toIndexedSeq.sorted.foreach { id =>
-      StreamStateDirs.delete(spark, s"$dir/stats/batch_id=$id")
-      rels.foreach(r => StreamStateDirs.delete(spark, s"$dir/$r/batch_id=$id"))
-    }
-    if (effective.length <= 1) return
-    val ids = effective.map(_.getLong(0)).toIndexedSeq.sorted
-    val base = math.min(ids.min, 0L) - 1L
-    // (schema, key columns, count columns) per known relation name
-    val specs: Map[String, (StructType, Seq[String], Seq[String])] = Map(
-      "uni" -> ((uniSchema, Seq("w1"), Seq("cu"))),
-      "bi" -> ((biSchema, Seq("w1", "w2"), Seq("cb"))),
-      "buckets" -> ((dsirSchema, Seq("__b"), Seq("cr", "ct"))),
-      "hist" -> ((histSchema, Seq("metric", "v"), Seq("c"))))
-    val folded = rels.map { r =>
-      val (schema, keyCols, cntCols) = specs(r)
-      val df = PipelineStreams.readOrEmpty(spark, s"$dir/$r", schema)
-        .where(col("batch_id").isin(ids: _*)).drop("batch_id")
-        .groupBy(keyCols.map(col): _*)
-        .agg(sum(cntCols.head).as(cntCols.head),
-          cntCols.tail.map(c => sum(c).as(c)): _*)
-        .localCheckpoint(true)
-      r -> df
-    }
-    try {
-      folded.foreach { case (r, df) =>
-        df.write.mode("overwrite").parquet(s"$dir/$r/batch_id=$base")
-      }
-      import spark.implicits._
-      Seq((effective.map(_.getLong(1)).sum, ids)).toDF("n", "covers")
-        .write.mode("overwrite").parquet(s"$dir/stats/batch_id=$base")
-    } finally { folded.foreach(_._2.unpersist()); () }
-    ids.foreach { id =>
-      StreamStateDirs.delete(spark, s"$dir/stats/batch_id=$id")
-      rels.foreach(r => StreamStateDirs.delete(spark, s"$dir/$r/batch_id=$id"))
-    }
+  def compact(spark: SparkSession, dir: String): Unit = {
+    val present = Seq(lmLayout, dsirLayout, histLayout).filter(
+      _.relations.exists(r => StreamStateDirs.exists(spark, s"$dir/${r.name}")))
+    require(present.size <= 1,
+      s"$dir holds the relations of ${present.size} model layouts")
+    present.foreach(_.compact(spark, dir))
   }
 }

@@ -284,15 +284,14 @@ object PipelineStreams {
   def curatedClustered(spark: SparkSession, stateDir: String,
       docSchema: StructType, idCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (effective, covered) = ClusterStreams
-      .committedAndCovered(spark, s"$stateDir/cluster")
-    val valid = (effective ++ covered).distinct
+    val m = ClusterStreams.layout.marks(spark, s"$stateDir/cluster")
+    val valid = (m.effective ++ m.covered).distinct
     val candSchema = docSchema
       .add(StructField("__q", org.apache.spark.sql.types.LongType))
       .add(StructField("__passes", org.apache.spark.sql.types.BooleanType))
       .add(StructField("batch_id", org.apache.spark.sql.types.LongType))
     val w = Window.partitionBy(col(idCol)).orderBy(col("batch_id").desc)
-    val cands = readOrEmpty(spark, s"$stateDir/cands", candSchema)
+    val cands = StreamStateDirs.readOrEmpty(spark, s"$stateDir/cands", candSchema)
       .where(col("batch_id").isin(valid: _*))
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1)
@@ -321,11 +320,10 @@ object PipelineStreams {
   def compactClustered(spark: SparkSession, stateDir: String,
       idCol: String): Unit = {
     ClusterStreams.compact(spark, s"$stateDir/cluster")
-    val (effective, covered) = ClusterStreams
-      .committedAndCovered(spark, s"$stateDir/cluster")
-    if (effective.isEmpty) return
-    val base = effective.min
-    val valid = (effective ++ covered).distinct
+    val m = ClusterStreams.layout.marks(spark, s"$stateDir/cluster")
+    if (m.effective.isEmpty) return
+    val base = m.effective.min
+    val valid = (m.effective ++ m.covered).distinct
     // BOTH row states fold ONLY marker-vouched partitions. Folding an
     // unvouched fp/batch_id=N (a batch that crashed after its fp write
     // but before its cluster commit) into the negative base would hand
@@ -356,7 +354,7 @@ object PipelineStreams {
         .select(col("batch_id").cast("long")).distinct()
         .collect().map(_.getLong(0)).toSeq) match {
       case scala.util.Success(s) => s
-      case scala.util.Failure(e) if pathMissing(e) => Seq.empty
+      case scala.util.Failure(e) if StreamStateDirs.pathMissing(e) => Seq.empty
       case scala.util.Failure(e) => throw e
     }
     val toFold = ids.filter(id => valid.contains(id) && id != base)
@@ -384,7 +382,7 @@ object PipelineStreams {
     * column; empty (with the right schema) before the first batch.
     */
   def fingerprints(spark: SparkSession, stateDir: String): DataFrame =
-    readOrEmpty(spark, stateDir,
+    StreamStateDirs.readOrEmpty(spark, stateDir,
       fpSchema.add(StructField("batch_id", org.apache.spark.sql.types.LongType)))
 
   /** Fold every fingerprint partition into ONE base partition under a
@@ -430,35 +428,6 @@ object PipelineStreams {
     * along from the directory layout.
     */
   def curated(spark: SparkSession, outDir: String, schema: StructType): DataFrame =
-    readOrEmpty(spark, outDir,
+    StreamStateDirs.readOrEmpty(spark, outDir,
       schema.add(StructField("batch_id", org.apache.spark.sql.types.LongType)))
-
-  private[streaming] def readOrEmpty(spark: SparkSession, dir: String,
-      schema: StructType): DataFrame =
-    Try(spark.read.schema(schema).parquet(dir)) match {
-      case scala.util.Success(df) => df
-      // ONLY a missing directory means "no state yet". Any other read
-      // failure (IO hiccup, corrupt footer, permissions) must
-      // PROPAGATE and fail the micro-batch so the stream retries —
-      // swallowing it would settle the batch against an empty history
-      // and silently re-admit every previously-seen document.
-      case scala.util.Failure(e) if pathMissing(e) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      case scala.util.Failure(e) => throw e
-    }
-
-  /** True iff the failure chain means "this path does not exist" —
-    * the ONE failure a state/index reader may treat as empty state
-    * (shared with [[SearchStreams]]). The cause walk is depth-bounded:
-    * a cyclic cause chain (constructible with two mutually-caused
-    * exceptions; some wrapper libraries produce them) must not turn
-    * error CLASSIFICATION into a StackOverflowError.
-    */
-  private[streaming] def pathMissing(e: Throwable, depth: Int = 20): Boolean =
-    depth > 0 && e != null && (e.isInstanceOf[java.io.FileNotFoundException] ||
-      (e match {
-        case a: org.apache.spark.sql.AnalysisException =>
-          a.getCondition == "PATH_NOT_FOUND"
-        case _ => false
-      }) || pathMissing(e.getCause, depth - 1))
 }

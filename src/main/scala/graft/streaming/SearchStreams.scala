@@ -11,16 +11,15 @@ import graft.ops.Search.TextIndex
 /** Streaming maintenance of the BM25 inverted index
   * ([[graft.ops.Search]]): each micro-batch of landing documents is
   * indexed ONCE ([[Search.buildIndex]] — one tokenize pass) and its
-  * PARTIAL relations (tf, lens, per-batch df, 1-row batch stats) land
-  * under `indexDir/<rel>/batch_id=N` — the per-batch-id idempotent
-  * overwrite layout [[PipelineStreams]] uses, so a retried batch
-  * replaces its own output. No read-modify-write ever happens on the
-  * hot path: the df merge [[Search.mergeIndex]] performs batch-by-batch
-  * is deferred to [[loadIndex]], which reconstructs the full index by
-  * appending tf/lens and term-summing the per-batch df partials — the
-  * same algebra, proven equal to a direct whole-corpus build by t15's
-  * shared oracle and pinned across micro-batches by
-  * `SearchStreamsSpec`.
+  * PARTIAL relations (tf, lens, per-batch df) commit through the
+  * [[StreamStateDirs]] marker protocol, the marker (`stats`) carrying
+  * the batch's document and token counts. No read-modify-write ever
+  * happens on the hot path: the df merge [[Search.mergeIndex]]
+  * performs batch-by-batch is deferred to [[loadIndex]], which
+  * reconstructs the full index by appending tf/lens and term-summing
+  * the per-batch df partials — the same algebra, proven equal to a
+  * direct whole-corpus build by t15's shared oracle and pinned across
+  * micro-batches by `SearchStreamsSpec`.
   *
   * Contract: document ids must be unique ACROSS batches (exact-dedup
   * the stream first — [[PipelineStreams.settleBatch]] is the settle
@@ -29,29 +28,21 @@ import graft.ops.Search.TextIndex
   * At 100 TB this is the index-refresh daily: partial relations are
   * bounded by the BATCH, reads compact them with one term-keyed sum,
   * and [[compact]] periodically folds old batch partitions into a
-  * base partition without changing any reader (the layout IS the
-  * merge state; the flip is atomic because sums must never
-  * double-count — see compact's scaladoc).
+  * base partition without changing any reader.
   */
 object SearchStreams {
 
-  private def tfSchema = StructType(Seq(
-    StructField("id", LongType), StructField("term", StringType),
-    StructField("tf", LongType), StructField("batch_id", LongType)))
-  private def dfSchema = StructType(Seq(
-    StructField("term", StringType), StructField("df", LongType),
-    StructField("batch_id", LongType)))
-  private def lensSchema = StructType(Seq(
-    StructField("id", LongType), StructField("dl", LongType),
-    StructField("batch_id", LongType)))
-  // `covers` marks a COMPACTED base partition: the listed batch ids
-  // are superseded by this one (see [[compact]]). Normal stream
-  // batches leave it null; old stats rows read as null under the
-  // evolved schema.
-  private def statsSchema = StructType(Seq(
-    StructField("n", LongType), StructField("toks", LongType),
-    StructField("covers", org.apache.spark.sql.types.ArrayType(LongType)),
-    StructField("batch_id", LongType)))
+  private[streaming] val layout = StreamStateDirs.Layout("stats", Seq(
+    StreamStateDirs.Relation("tf", StructType(Seq(
+      StructField("id", LongType), StructField("term", StringType),
+      StructField("tf", LongType))), StreamStateDirs.append),
+    StreamStateDirs.Relation("df", StructType(Seq(
+      StructField("term", StringType), StructField("df", LongType))),
+      StreamStateDirs.keyed("term")(sum("df").as("df"))),
+    StreamStateDirs.Relation("lens", StructType(Seq(
+      StructField("id", LongType), StructField("dl", LongType))),
+      StreamStateDirs.append)),
+    scalars = Seq("n", "toks"))
 
   /** Start the index-maintenance stream over `docs` (a streaming frame
     * with (idCol: long, textCol: string)).
@@ -72,15 +63,8 @@ object SearchStreams {
         val b = batch.localCheckpoint(true)
         try {
           val ix = Search.buildIndex(b, idCol, textCol)
-          // stats is written LAST: a batch present in stats is fully
-          // committed, which is loadIndex's consistency cutoff
-          ix.tf.write.mode("overwrite").parquet(s"$indexDir/tf/batch_id=$batchId")
-          ix.df.write.mode("overwrite").parquet(s"$indexDir/df/batch_id=$batchId")
-          ix.lens.write.mode("overwrite").parquet(s"$indexDir/lens/batch_id=$batchId")
-          val spark = b.sparkSession
-          import spark.implicits._
-          Seq((ix.nDocs, ix.totalTokens)).toDF("n", "toks")
-            .write.mode("overwrite").parquet(s"$indexDir/stats/batch_id=$batchId")
+          layout.commit(b.sparkSession, indexDir, batchId,
+            Seq(ix.tf, ix.df, ix.lens), Seq(ix.nDocs, ix.totalTokens))
         } finally {
           (sc.getPersistentRDDs.keySet -- pinnedBefore).foreach { id =>
             sc.getPersistentRDDs.get(id).foreach(_.unpersist(false))
@@ -90,105 +74,24 @@ object SearchStreams {
       }
       .start()
 
-  /** Reconstruct the merged [[TextIndex]] from every batch's partials:
-    * tf/lens are appends (ids disjoint by contract), df term-sums the
-    * per-batch partials, the scalars sum. Empty (no batch yet) yields
-    * an empty index with nDocs 0.
-    *
-    * CONSISTENCY: a batch counts as committed iff its `stats` row
-    * exists (stats is written last), and tf/df/lens are filtered to
-    * the committed batch set — a reader racing a mid-commit batch sees
-    * NONE of it instead of a torn index whose postings and corpus
-    * scalars disagree. The residual race is a RETRY overwriting an
-    * already-committed batch under a running reader scan (transient
-    * FileNotFound; content is deterministic, so re-running the read
-    * heals it).
+  /** Reconstruct the merged [[TextIndex]] from every committed batch's
+    * partials: tf/lens are appends (ids disjoint by contract), df
+    * term-sums the per-batch partials, the scalars sum. Empty (no batch
+    * yet) yields an empty index with nDocs 0. The residual race is a
+    * RETRY overwriting an already-committed batch under a running
+    * reader scan (transient FileNotFound; content is deterministic, so
+    * re-running the read heals it).
     */
   def loadIndex(spark: SparkSession, indexDir: String): TextIndex = {
-    def read(rel: String, schema: StructType): DataFrame =
-      PipelineStreams.readOrEmpty(spark, s"$indexDir/$rel", schema)
-    // tiny by construction: one row per batch ever committed, ~1 row
-    // after compaction. Unlike the member/fingerprint states, df and
-    // the scalars are SUMS — not idempotent — so a base partition and
-    // the originals it covers must never BOTH count: `covers` excludes
-    // the superseded ids at the same instant the base's stats row
-    // appears (stats is written last = the atomic flip).
-    val statRows = read("stats", statsSchema)
-      .select("batch_id", "n", "toks", "covers").collect()
-    val covered = statRows.iterator.filterNot(_.isNullAt(3))
-      .flatMap(_.getSeq[Long](3)).toSet
-    val effective = statRows.filterNot(r => covered.contains(r.getLong(0)))
-    val committed = effective.map(_.getLong(0)).toIndexedSeq
-    def rel(name: String, schema: StructType): DataFrame =
-      read(name, schema).where(col("batch_id").isin(committed: _*)).drop("batch_id")
-    val df = rel("df", dfSchema).groupBy("term").agg(sum("df").as("df"))
-    TextIndex(rel("tf", tfSchema), df, rel("lens", lensSchema),
-      effective.map(_.getLong(1)).sum, effective.map(_.getLong(2)).sum)
+    val m = layout.marks(spark, indexDir)
+    def rel(name: String) = layout.read(spark, indexDir, name, m.effective)
+    TextIndex(rel("tf"), rel("df"), rel("lens"), m.sums(0), m.sums(1))
   }
 
   /** Fold every effective batch's partials into ONE base partition per
-    * relation, so a long-running index stream's state stays a bounded
-    * file set. The df partials and corpus scalars merge by SUM — not
-    * idempotent — so the flip must be atomic to readers:
-    *
-    *  1. merged tf/df/lens land under a fresh NEGATIVE batch id
-    *     (stream ids are non-negative; no future collision). No stats
-    *     row yet ⇒ uncommitted ⇒ invisible;
-    *  2. the base's stats row lands LAST with `covers` = the folded
-    *     ids. The moment it appears, [[loadIndex]] counts the base and
-    *     stops counting the originals — one visibility flip, never a
-    *     double-count;
-    *  3. each old id's stats partition is deleted BEFORE its data
-    *     (covered ids are already excluded, so the deletes change
-    *     nothing a reader sees).
-    *
-    * Crash replay: the base id derives deterministically from the
-    * effective set, so a re-run overwrites any orphaned half-written
-    * base and finishes the deletes. No-op when ≤ 1 effective batch.
+    * relation ([[StreamStateDirs.Layout.compact]]), so a long-running
+    * index stream's state stays a bounded file set.
     */
-  def compact(spark: SparkSession, indexDir: String): Unit = {
-    val statRows = PipelineStreams
-      .readOrEmpty(spark, s"$indexDir/stats", statsSchema)
-      .select("batch_id", "n", "toks", "covers").collect()
-    val covered = statRows.iterator.filterNot(_.isNullAt(3))
-      .flatMap(_.getSeq[Long](3)).toSet
-    val effective = statRows.filterNot(r => covered.contains(r.getLong(0)))
-    // finish any prior compaction's interrupted deletes: covered
-    // partitions are already invisible, so removing them changes
-    // nothing a reader sees (stats marker first, then data)
-    covered.toIndexedSeq.sorted.foreach { id =>
-      StreamStateDirs.delete(spark, s"$indexDir/stats/batch_id=$id")
-      Seq("tf", "df", "lens").foreach(r =>
-        StreamStateDirs.delete(spark, s"$indexDir/$r/batch_id=$id"))
-    }
-    if (effective.length <= 1) return
-    val ids = effective.map(_.getLong(0)).toIndexedSeq.sorted
-    val base = math.min(ids.min, 0L) - 1L
-    def rel(name: String, schema: StructType): DataFrame =
-      PipelineStreams.readOrEmpty(spark, s"$indexDir/$name", schema)
-        .where(col("batch_id").isin(ids: _*)).drop("batch_id")
-    // eager checkpoints: fully materialize each fold before writing new
-    // partitions under the roots being read (no read-own-write listing)
-    val tf = rel("tf", tfSchema).localCheckpoint(true)
-    val dfm = rel("df", dfSchema).groupBy("term").agg(sum("df").as("df"))
-      .localCheckpoint(true)
-    val lens = rel("lens", lensSchema).localCheckpoint(true)
-    try {
-      tf.write.mode("overwrite").parquet(s"$indexDir/tf/batch_id=$base")
-      dfm.write.mode("overwrite").parquet(s"$indexDir/df/batch_id=$base")
-      lens.write.mode("overwrite").parquet(s"$indexDir/lens/batch_id=$base")
-      import spark.implicits._
-      // the atomic flip: base becomes committed AND covers the originals
-      Seq((effective.map(_.getLong(1)).sum, effective.map(_.getLong(2)).sum,
-        ids)).toDF("n", "toks", "covers")
-        .write.mode("overwrite").parquet(s"$indexDir/stats/batch_id=$base")
-    } finally {
-      tf.unpersist(); dfm.unpersist(); lens.unpersist(); ()
-    }
-    ids.foreach { id =>
-      StreamStateDirs.delete(spark, s"$indexDir/stats/batch_id=$id")
-      Seq("tf", "df", "lens").foreach(r =>
-        StreamStateDirs.delete(spark, s"$indexDir/$r/batch_id=$id"))
-    }
-  }
+  def compact(spark: SparkSession, indexDir: String): Unit =
+    layout.compact(spark, indexDir)
 }

@@ -115,4 +115,56 @@ class IngestPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(JdbcDdl.commentOnTable("public", "T", "a/b'c") ==
       "COMMENT ON TABLE \"public\".\"t\" IS 'a/b''c';")
   }
+
+  test("a PCR issued in two files of one batch keeps only the file that sorts last") {
+    def vitals(lake: String, pcr: String) =
+      spark.read.parquet(IngestPipeline.elementsPath(lake))
+        .where(col("table_name") === "eVitals_01" && col("pcr_uuid_context") === pcr)
+        .select("text_value").collect().map(_.getString(0)).toSeq
+    def pcrRows(lake: String, pcr: String) =
+      spark.read.parquet(IngestPipeline.elementsPath(lake))
+        .where(col("pcr_uuid_context") === pcr).count()
+
+    // into an empty lake: 4 PCR-scoped rows of dupB + one root per file
+    val landing = tmpDir("graft_dup_landing")
+    val lake = tmpDir("graft_dup_lake").toString
+    Files.writeString(landing.resolve("dupA.xml"), xml("pcr-9", "old"))
+    Files.writeString(landing.resolve("dupB.xml"), xml("pcr-9", "new"))
+    Files.writeString(landing.resolve("other.xml"), xml("pcr-3", "x"))
+    val r1 = IngestPipeline.ingestDirectory(spark, s"$landing/*.xml", lake)
+    assert(vitals(lake, "pcr-9") == Seq("new"))
+    assert(pcrRows(lake, "pcr-9") == 4)
+    assert(r1.elementCount == 4 + 2 + 5) // pcr-9, two roots, other.xml
+
+    // into the loaded lake (the keyed-overwrite path): same rule
+    val fix = tmpDir("graft_dup_fix")
+    Files.writeString(fix.resolve("fixA.xml"), xml("pcr-9", "v3"))
+    Files.writeString(fix.resolve("fixB.xml"), xml("pcr-9", "v4"))
+    IngestPipeline.ingestDirectory(spark, s"$fix/*.xml", lake)
+    assert(vitals(lake, "pcr-9") == Seq("v4"))
+    assert(pcrRows(lake, "pcr-9") == 4)
+    assert(vitals(lake, "pcr-3") == Seq("x"))
+
+    // the streaming path commits the same way, and its mirror receives
+    // the winner-filtered batch
+    val sLanding = tmpDir("graft_dup_slanding")
+    val sLake = tmpDir("graft_dup_slake").toString
+    Files.writeString(sLanding.resolve("dupA.xml"), xml("pcr-9", "old"))
+    Files.writeString(sLanding.resolve("dupB.xml"), xml("pcr-9", "new"))
+    val url = "jdbc:derby:memory:graftdupmirror;create=true"
+    val q = IngestPipeline.streamingIngest(spark, sLanding.toString, sLake,
+      tmpDir("graft_dup_archive").toString, tmpDir("graft_dup_ckpt").toString,
+      mirror = Some(JdbcMirror.MirrorConfig(url, dialect = JdbcMirror.DerbyDialect)))
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    assert(vitals(sLake, "pcr-9") == Seq("new"))
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val rs = conn.createStatement().executeQuery(
+        """SELECT "evitals_01_value" FROM "APP"."evitals_01"""")
+      val mirrored = Iterator.continually(rs).takeWhile(_.next()).map(_.getString(1)).toList
+      rs.close()
+      assert(mirrored == List("new"))
+    } finally conn.close()
+  }
 }

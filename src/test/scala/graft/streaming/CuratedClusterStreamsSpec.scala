@@ -99,7 +99,7 @@ class CuratedClusterStreamsSpec extends AnyFunSuite with SparkSpec {
     PipelineStreams.compactClustered(spark, state, "doc_id")
     assert(curatedRows(state) == expected, "compaction must not change the view")
     // and it actually compacted: one effective cluster commit remains
-    val (eff, _) = ClusterStreams.committedAndCovered(spark, s"$state/cluster")
+    val eff = ClusterStreams.layout.marks(spark, s"$state/cluster").effective
     assert(eff.size == 1 && eff.head < 0L, eff)
     // a second compaction is a no-op that stays readable
     PipelineStreams.compactClustered(spark, state, "doc_id")

@@ -74,7 +74,7 @@ class CuratedModelComposeSpec extends AnyFunSuite with SparkSpec {
       .count() === 0)
 
     // compaction of the composed model state is reader-invariant too
-    ModelStreams.compact(spark, model, Seq("uni", "bi"))
+    ModelStreams.compact(spark, model)
     val compacted = ModelStreams.loadModel(spark, model)
     assert(compacted.vocab === direct.vocab)
     assert(rows(compacted.uni) === rows(direct.uni))

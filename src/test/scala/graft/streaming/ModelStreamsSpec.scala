@@ -46,7 +46,7 @@ class ModelStreamsSpec extends AnyFunSuite with SparkSpec {
       rows(LangModel.score(probe, "doc_id", "text", direct)))
 
     // compaction folds the partials without changing the model
-    ModelStreams.compact(spark, dir, Seq("uni", "bi"))
+    ModelStreams.compact(spark, dir)
     val compacted = ModelStreams.loadModel(spark, dir)
     assert(compacted.vocab === direct.vocab)
     assert(rows(compacted.uni) === rows(direct.uni))
@@ -86,7 +86,7 @@ class ModelStreamsSpec extends AnyFunSuite with SparkSpec {
     assert(rows(viaModel) === rows(oneShot))
 
     // compaction folds the partials without changing the model
-    ModelStreams.compact(spark, dir, Seq("buckets"))
+    ModelStreams.compact(spark, dir)
     assert(rows(ModelStreams.loadDsirModel(spark, dir)) === rows(direct))
   }
 
@@ -120,7 +120,7 @@ class ModelStreamsSpec extends AnyFunSuite with SparkSpec {
     assert(ModelStreams.loadThresholds(spark, dir, "quality", 3,
       ascending = false) == direct("quality", asc = false))
 
-    ModelStreams.compact(spark, dir, Seq("hist"))
+    ModelStreams.compact(spark, dir)
     assert(ModelStreams.loadThresholds(spark, dir, "n_chars", 3) ==
       direct("n_chars", asc = true))
     assert(ModelStreams.loadThresholds(spark, dir, "quality", 3,

@@ -3,8 +3,11 @@ package graft.streaming
 import java.nio.file.{Files, Path => JPath, Paths}
 import java.sql.Timestamp
 
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.ops.Search
@@ -15,7 +18,8 @@ import graft.ops.Search
   * (base written but unmarked; base committed but originals not yet
   * deleted), with a compaction replay converging afterwards. The
   * folded state must also actually FOLD: one base partition where N
-  * batch partitions were.
+  * batch partitions were. The last table runs those crash windows over
+  * every face of the [[StreamStateDirs]] marker protocol.
   */
 class StreamingCompactionSpec extends AnyFunSuite with SparkSpec {
 
@@ -244,5 +248,145 @@ class StreamingCompactionSpec extends AnyFunSuite with SparkSpec {
     assert(snapshot() === before)
     Seq("tf", "df", "lens", "stats").foreach(r =>
       assert(partitionIds(s"$dir/$r").size === 1, s"relation $r not folded"))
+  }
+
+  // ---- every marker face -------------------------------------------------
+
+  /** Runs a face's stream over `batches`, one micro-batch each. */
+  private def feed[T: Encoder](batches: Seq[Seq[T]], cols: String*)(
+      start: (DataFrame, String) => StreamingQuery): Unit = {
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[T]
+    val q = start(in.toDS().toDF(cols: _*),
+      Files.createTempDirectory("graft_cmp_face_ckpt").toString)
+    try batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+  }
+
+  private def rows(d: DataFrame) = d.collect().map(_.toSeq).toSet
+
+  /** One marker-gated face: its layout, a filler that commits three
+    * batches under a state dir, what a reader sees, and its compaction.
+    */
+  private case class Face(name: String, layout: StreamStateDirs.Layout,
+      fill: String => Unit, read: String => Any, compact: String => Unit)
+
+  private def faces: Seq[Face] = {
+    import spark.implicits._
+    val texts = Seq(
+      Seq((1L, "alpha beta gamma alpha shared boilerplate sentence here"),
+        (2L, "beta beta delta")),
+      Seq((11L, "alpha beta delta shared boilerplate sentence here"),
+        (12L, "gamma alpha beta")),
+      Seq((21L, "epsilon zeta alpha shared boilerplate sentence here")))
+    val base = (1 to 30).map(i => s"w$i").mkString(" ")
+    Seq(
+      Face("graph", GraphStreams.layout,
+        dir => feed(Seq(
+            Seq(("click", ts(5), 10L), ("click", ts(10), 30L), ("view", ts(7), 20L)),
+            Seq(("click", ts(2), 30L), ("click", ts(8), 20L), ("view", ts(9), 10L)),
+            Seq(("click", ts(1), 40L), ("view", ts(3), 30L))),
+          "event_type", "ts", "user_id")(GraphStreams.memberStream(_, dir, _)),
+        dir => rows(GraphStreams.loadEdges(spark, dir)),
+        GraphStreams.compact(spark, _)),
+      Face("cluster", ClusterStreams.layout,
+        // near-dup docs across batches, so later label deltas supersede
+        // earlier ones
+        dir => feed(Seq(Seq((1L, s"$base x1"), (2L, s"$base x2")),
+            Seq((5L, s"$base x5"), (9L, "unrelated words entirely")),
+            Seq((6L, s"$base x6"))), "id", "text")(
+          ClusterStreams.clusterStream(_, "id", "text", dir, _)),
+        dir => (rows(ClusterStreams.loadLabels(spark, dir)),
+          rows(ClusterStreams.loadBands(spark, dir))),
+        ClusterStreams.compact(spark, _)),
+      Face("search", SearchStreams.layout,
+        dir => feed(texts, "doc_id", "text")(
+          SearchStreams.indexStream(_, "doc_id", "text", dir, _)),
+        dir => {
+          val ix = SearchStreams.loadIndex(spark, dir)
+          (ix.nDocs, ix.totalTokens, rows(ix.tf), rows(ix.df), rows(ix.lens))
+        },
+        SearchStreams.compact(spark, _)),
+      Face("lm", ModelStreams.lmLayout,
+        dir => feed(texts, "doc_id", "text")(
+          ModelStreams.lmStream(_, "text", dir, _)),
+        dir => {
+          val m = ModelStreams.loadModel(spark, dir)
+          (m.vocab, rows(m.uni), rows(m.bi))
+        },
+        ModelStreams.compact(spark, _)),
+      Face("dsir", ModelStreams.dsirLayout,
+        dir => feed(texts.zipWithIndex.map { case (b, i) =>
+            b.map { case (id, t) => (id, t, i % 2 == 0) } },
+          "doc_id", "text", "is_target")(
+          ModelStreams.dsirStream(_, "text", "is_target", 64, dir, _)),
+        dir => rows(ModelStreams.loadDsirModel(spark, dir)),
+        ModelStreams.compact(spark, _)),
+      Face("hist", ModelStreams.histLayout,
+        dir => feed(Seq(Seq((1L, 10L, 3L), (2L, 20L, 9L)),
+            Seq((11L, 10L, 2L), (12L, 35L, 9L)), Seq((21L, 20L, 4L))),
+          "doc_id", "n_chars", "quality")(
+          ModelStreams.histStream(_, Seq("n_chars", "quality"), dir, _)),
+        dir => (rows(ModelStreams.loadHistogram(spark, dir, "n_chars")),
+          rows(ModelStreams.loadHistogram(spark, dir, "quality",
+            ascending = false))),
+        ModelStreams.compact(spark, _)),
+      Face("cdc", DedupStreams.cdcLayout,
+        dir => feed(texts.map(_.map { case (id, t) => (s"src${id % 2}", t) }),
+          "source", "text")(DedupStreams.cdcChunkIndexStream(_, dir, _)),
+        dir => rows(DedupStreams.loadCdcChunkIndex(spark, dir)),
+        DedupStreams.compactCdcChunkIndex(spark, _)),
+      Face("cross-span", DedupStreams.crossSpanLayout,
+        dir => feed(texts.map(_.map { case (id, t) => (id, t, "s1") }),
+          "doc_id", "text", "source")(
+          DedupStreams.crossSpanIndexStream(_, dir, _, minLen = 10)),
+        dir => rows(DedupStreams.loadCrossSpanIndex(spark, dir)),
+        DedupStreams.compactCrossSpanIndex(spark, _)))
+  }
+
+  faces.foreach { face =>
+    test(s"${face.name} state: unmarked base invisible; base+originals under a covering marker read the same; replays converge") {
+      val dirs = face.layout.markers +: face.layout.relations.map(_.name)
+      def copy(from: String, to: String, sub: String, id: Long): Unit =
+        FileUtils.copyDirectory(new java.io.File(s"$from/$sub/batch_id=$id"),
+          new java.io.File(s"$to/$sub/batch_id=$id"))
+      def fresh(prefix: String, from: String): String = {
+        val d = Files.createTempDirectory(prefix).toString
+        FileUtils.copyDirectory(new java.io.File(from), new java.io.File(d))
+        d
+      }
+      def folded(d: String) = dirs.foreach(sub =>
+        assert(partitionIds(s"$d/$sub") === Set(-1L), s"$sub not folded"))
+
+      val dir = Files.createTempDirectory(s"graft_face_${face.name}").toString
+      face.fill(dir)
+      val before = face.read(dir)
+      dirs.foreach(sub => assert(partitionIds(s"$dir/$sub") === Set(0L, 1L, 2L)))
+
+      // what a finished compaction writes, taken from a copy
+      val ref = fresh("graft_face_ref", dir)
+      face.compact(ref)
+      assert(face.read(ref) === before)
+      folded(ref)
+
+      // window A: the base's partials landed, its marker did not
+      face.layout.relations.foreach(r => copy(ref, dir, r.name, -1L))
+      assert(face.read(dir) === before, "an unmarked base must be invisible")
+      val replayA = fresh("graft_face_a", dir)
+      face.compact(replayA)
+      assert(face.read(replayA) === before)
+      folded(replayA)
+
+      // window B: the covering marker landed, the originals remain
+      copy(ref, dir, face.layout.markers, -1L)
+      assert(face.read(dir) === before,
+        "base and covered originals must read as the originals did")
+      face.compact(dir)
+      assert(face.read(dir) === before)
+      folded(dir)
+      face.compact(dir) // a further replay is a no-op
+      assert(face.read(dir) === before)
+      folded(dir)
+    }
   }
 }
