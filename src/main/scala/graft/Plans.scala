@@ -243,9 +243,8 @@ object Plans {
     // driven by the merged (source, gram, n_docs) index — the probe
     // side is a sum-merged equi-join, never a recount of history)
     "d36_incremental_cross_span",
-    // round 12: d37 wide cross-span removal (minLen=40 — the hashed
-    // xxhash64 carrier path: 8-byte keys on the data-sized shuffles,
-    // literal re-verification candidate-sized)
+    // round 12: d37 wide cross-span removal (minLen=40 — d35's one
+    // literal gram carrier at a wider window)
     "d37_wide_cross_span")
 
   def main(args: Array[String]): Unit = {
@@ -282,23 +281,6 @@ object Plans {
         .queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       sb ++= s"\n## $name\n\n```\n$plan```\n"
-    }
-    // the hashed carrier's PRE-CHECKPOINT hash pass (round 13 — the
-    // committed d37 plan above shows only post-checkpoint stages, so
-    // the "literal grams never hit a data-sized exchange" claim needs
-    // this stage's plan on record too; the machine gate is the
-    // SuffixArraySpec plan test): scan-local xxhash64 projection, then
-    // ONE exchange keyed (source, ghash) with partial min/max/count —
-    // no countDistinct Expand, no literal gram column below the scan.
-    locally {
-      val base = graft.sources.Tables.load(spark, sf, "documents")
-        .where(org.apache.spark.sql.functions.col("text").isNotNull)
-        .select("doc_id", "text", "source")
-      val pre = graft.ops.SuffixArray.hashPrefilter(
-        graft.ops.SuffixArray.hashGramRows(base, 40))
-      val plan = pre.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      sb ++= s"\n## d37_wide_cross_span — pre-checkpoint hash pass (hashGramRows → hashPrefilter, minLen=40)\n\n```\n$plan```\n"
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out")

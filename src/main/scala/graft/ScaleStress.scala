@@ -467,37 +467,15 @@ object ScaleStress {
             minLen = 20)),
         // d35 at the deployed ExactSubstr threshold (r12): minLen=250
         // on the mutated-twin corpus (every >=250-char doc's windows
-        // recur verbatim in its twin) — the regime where the literal
-        // carrier's minLen-char shuffle keys dominate the wire.
-        // d35wide pins the LITERAL carrier; d35wideh is the hashed
-        // xxhash64 carrier + literal candidate re-verification (the
-        // d25 discipline) — output byte-identical, spec-proven
+        // recur verbatim in its twin) — the regime where the gram
+        // carrier's minLen-char shuffle keys are widest
         "d35wide" -> (() => graft.ops.SuffixArray
           .crossDocSpanRemoval(corpus, "doc_id", "text", "source",
-            minLen = 250, hashedCarrierFrom = Int.MaxValue)),
-        "d35wideh" -> (() => graft.ops.SuffixArray
-          .crossDocSpanRemoval(corpus, "doc_id", "text", "source",
-            minLen = 250, hashedCarrierFrom = 1,
-            candRouteFraction = Double.MaxValue)),
-        // the SHIPPED hashed-carrier behavior on the candidate-dense
-        // twin corpus (r12): the measured candidate mass (~all
-        // positions) trips the CandRouteFraction reroute, so the row
-        // bounds the adversarial premium at one 8-byte hash pass +
-        // the literal run — vs d35wideh's unrouted re-verification
-        "d35wideauto" -> (() => graft.ops.SuffixArray
-          .crossDocSpanRemoval(corpus, "doc_id", "text", "source",
-            minLen = 250, hashedCarrierFrom = 1)),
-        // the hashed carrier's DESIGN regime (r12): a mostly-clean
-        // corpus (per-doc salts break every cross-doc run outside
-        // src0) at the deployed threshold — candidates are sparse, so
-        // the literal carrier ships 250-char keys for EVERY position
-        // while the hashed one ships 8 bytes + a candidate-sized
-        // re-verification; d35widec pins literal, d35widech is the
-        // shipped default (hashed, no route below the fraction)
+            minLen = 250)),
+        // the same threshold on a mostly-clean corpus (per-doc salts
+        // break every cross-doc run outside src0): candidates are
+        // sparse, but every position still ships its 250-char key
         "d35widec" -> (() => graft.ops.SuffixArray
-          .crossDocSpanRemoval(saltedClean(plain), "doc_id", "text",
-            "source", minLen = 250, hashedCarrierFrom = Int.MaxValue)),
-        "d35widech" -> (() => graft.ops.SuffixArray
           .crossDocSpanRemoval(saltedClean(plain), "doc_id", "text",
             "source", minLen = 250)),
         // d35 with the ~3M-char giant (r12): the giant's grams route

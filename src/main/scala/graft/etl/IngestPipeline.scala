@@ -70,13 +70,9 @@ object IngestPipeline {
     * AFTER the new directory is in place; [[recoverLake]] undoes a
     * crash between the two renames. Rename results are checked — a
     * false return (e.g. cross-filesystem move) aborts instead of
-    * silently reporting success.
-    */
-  private[etl] def writeMergedLake(spark: SparkSession, merged: DataFrame, lakeDir: String): Unit =
-    withLakeLock(spark, lakeDir) { writeMergedLakeUnlocked(spark, merged, lakeDir) }
-
-  /** The swap itself, for callers that ALREADY hold the lake lock
-    * (compaction holds it across its read-rewrite-swap window).
+    * silently reporting success. Callers hold the lake lock
+    * ([[withLakeLock]]); compaction holds it across its
+    * read-rewrite-swap window.
     */
   private[etl] def writeMergedLakeUnlocked(spark: SparkSession, merged: DataFrame, lakeDir: String): Unit = {
     val elemsDir = elementsPath(lakeDir)

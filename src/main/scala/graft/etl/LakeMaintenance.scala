@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * derived from one row-count aggregation (driver sees only tag names —
   * schema-metadata-sized), rows are bucketed by a hash of the element
   * id, and the rewrite goes through the SAME crash-safe tmp+swap as
-  * ingest ([[IngestPipeline.writeMergedLake]]) so a compaction crash
+  * ingest ([[IngestPipeline.writeMergedLakeUnlocked]]) so a compaction crash
   * can never lose the lake. The lake LOCK is held for the whole
   * read-rewrite-swap window: a concurrent ingest (batch or streaming
   * micro-batch) blocks until compaction finishes instead of racing the

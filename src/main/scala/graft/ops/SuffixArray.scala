@@ -97,36 +97,6 @@ object SuffixArray {
     */
   val TieMassBudget: Long = 8L * 1024 * 1024
 
-  /** minLen at and above which [[crossDocSpanRemoval]] carries
-    * `xxhash64(gram)` on its data-sized shuffles instead of the
-    * literal gram string, re-verifying candidates literally (the d25
-    * discipline — see [[crossSpanHashedImpl]]). 33 = the first width
-    * where the literal key exceeds four longs, and far below the
-    * deployed ExactSubstr threshold (~50 tokens ≈ 250+ chars) where
-    * the literal key would dominate the shuffle. Below it the literal
-    * carrier wins: one pass, no re-verification joins.
-    */
-  val HashedGramCarrierMinLen: Int = 33
-
-  /** Candidate-mass fraction past which the hashed gram carrier
-    * reroutes to the literal carrier (the containmentPairsAuto
-    * discipline: route on a MEASURED quantity, here the exact
-    * candidate position mass, read off the hash-level multi-doc
-    * aggregate before any literal-width shuffle is paid). The hashed
-    * carrier's premium over the literal one is its candidate-sized
-    * re-verification (a literal fetch + a second distinct-doc count
-    * + a second start semi-join); when most positions are candidates
-    * — a boilerplate-twin corpus, measured 6.6× the literal carrier
-    * at 10× — the "narrow" path re-pays the full literal volume on
-    * top of the hash pass, while the literal carrier pays it once.
-    * 0.25 keeps the adversarial penalty bounded by ~one 8-byte hash
-    * pass (cheap by construction) instead of the unbounded
-    * re-verification premium; mostly-clean corpora (the 100 TB
-    * regime the carrier exists for) sit far below it and never
-    * route.
-    */
-  val CandRouteFraction: Double = 0.25
-
   private val K0 = 8
 
   /** Radix for the giant paths' packed multi-code-per-long keys
@@ -1396,26 +1366,10 @@ object SuffixArray {
     * text reassembled chunk-wise (1M-char pieces, then one
     * output-sized concat per document) — never a doc-bounded window
     * or a doc-sized intermediate array. Output matches [[cutSpans]]'s
-    * schema and, by the gram-coverage identity, its bytes. Giants
-    * with NO covered position short-circuit to a pass-through
-    * projection (round 12): disassembling and reassembling a clean
-    * 100 MB document char-by-char to conclude "unchanged" is the
-    * single most expensive no-op in the family — the starts relation
-    * already names the docs that need the machinery, and the
-    * membership split is giant-count-sized.
+    * schema and, by the gram-coverage identity, its bytes.
     */
-  private def cutCoveredGiant(giantBase0: DataFrame, starts0: DataFrame,
+  private def cutCoveredGiant(giantBase: DataFrame, starts: DataFrame,
       minLen: Int, extraCols: Seq[String] = Nil): DataFrame = {
-    val starts = starts0.localCheckpoint(true)
-    val cutDocs = starts.select("doc_id").distinct()
-    val untouched = giantBase0
-      .join(broadcast(cutDocs), Seq("doc_id"), "left_anti")
-      .select(Seq(col("doc_id")) ++ extraCols.map(col) ++
-        Seq(length(col("text")).cast("long").as("n_chars"),
-          length(col("text")).cast("long").as("n_kept_chars"),
-          col("text").as("cleaned")): _*)
-    val giantBase = giantBase0
-      .join(broadcast(cutDocs), Seq("doc_id"), "left_semi")
     val chunkChars = 1L << 20
     // per-char rows via CHUNK-local split (round 12): the doc-level
     // split(text, "") materialized a doc-sized array per giant row —
@@ -1454,7 +1408,6 @@ object SuffixArray {
         Seq(length(col("text")).cast("long").as("n_chars"),
           coalesce(col("n_kept_chars"), lit(0L)).as("n_kept_chars"),
           coalesce(col("cleaned"), lit("")).as("cleaned")): _*)
-      .unionByName(untouched)
   }
 
   /** Cross-document EXACT span removal per source (d35 — Lee et al.
@@ -1478,16 +1431,11 @@ object SuffixArray {
     * scan task and cut via the island/complement fold ([[cutSpans]]);
     * docs past `giantThreshold` route through [[gatherGrams]] /
     * [[cutCoveredGiant]] like d34's giants. Gram equality is literal
-    * string equality — exact, never probabilistic (the data-sized
-    * shuffle carries minLen-char keys; past
-    * `hashedCarrierFrom` — default [[HashedGramCarrierMinLen]] — the
-    * operator switches to [[crossSpanHashedImpl]]: an 8-byte
-    * `xxhash64` carrier on every data-sized shuffle plus literal
-    * candidate re-verification, the d25 discipline, byte-identical
-    * output by the re-verification argument in that impl's scaladoc;
-    * when the MEASURED candidate mass exceeds `candRouteFraction` of
-    * all positions the hashed impl itself reroutes to the literal
-    * carrier — see [[CandRouteFraction]]).
+    * string equality — exact, never probabilistic. The data-sized
+    * shuffle carries the minLen-char keys themselves: an 8-byte
+    * `xxhash64` key with literal re-verification of the candidates
+    * measured slower on every corpus tried, mostly-clean ones
+    * included (SCALING.md, "One gram carrier").
     *
     * Returns one row per non-null-text document:
     * (doc_id, source, n_chars, n_kept_chars, cleaned).
@@ -1495,15 +1443,9 @@ object SuffixArray {
   def crossDocSpanRemoval(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", srcCol: String = "source",
       minLen: Int = 16,
-      giantThreshold: Long = GiantGroupThreshold,
-      hashedCarrierFrom: Int = HashedGramCarrierMinLen,
-      candRouteFraction: Double = CandRouteFraction): DataFrame =
-    if (minLen >= hashedCarrierFrom)
-      crossSpanHashedImpl(docs, idCol, textCol, srcCol, minLen,
-        giantThreshold, candRouteFraction)
-    else
-      crossSpanImpl(docs, idCol, textCol, srcCol, minLen, giantThreshold,
-        index = None)
+      giantThreshold: Long = GiantGroupThreshold): DataFrame =
+    crossSpanImpl(docs, idCol, textCol, srcCol, minLen, giantThreshold,
+      index = None)
 
   /** The persistable cross-span GRAM INDEX (d36 — d35's settle face,
     * the d27→d28 / d29→d33 pattern): per (source, gram), the count of
@@ -1589,15 +1531,11 @@ object SuffixArray {
     * window: sub-threshold docs materialize their gram array inside
     * the scan task (doc-sized array rows are fine under the threshold
     * — the same budget the direct d34 path runs on); giant docs via
-    * the balanced [[gatherGrams]], or — when the hashed carrier
-    * reroutes after already assembling (and checkpointing) the giant
-    * grams — the pre-built `giantGramsPre` relation, so the
-    * adversarial route never pays giant gram assembly twice.
-    * `__giant` tags which cut face a start belongs to without a
-    * second membership join.
+    * the balanced [[gatherGrams]]. `__giant` tags which cut face a
+    * start belongs to without a second membership join.
     */
   private def crossGrams(split: (DataFrame, DataFrame, Boolean),
-      minLen: Int, giantGramsPre: Option[DataFrame] = None): DataFrame = {
+      minLen: Int): DataFrame = {
     val (smallBase, giantBase, hasGiants) = split
     val gramsSmall = smallBase
       .where(length(col("text")) >= minLen)
@@ -1610,35 +1548,25 @@ object SuffixArray {
         (col("p0") + 1).cast("long").as("pos"), col("gram"),
         lit(false).as("__giant"))
     if (!hasGiants) gramsSmall
-    else gramsSmall.unionByName(
-      giantGramsPre
-        .map(_.select(col("doc_id"), col("source"),
-          col("pos").cast("long").as("pos"), col("gram"),
-          lit(true).as("__giant")))
-        .getOrElse(gatherGrams(giantBase, minLen)
-          .join(broadcast(giantBase.select("doc_id", "source")), Seq("doc_id"))
-          .select(col("doc_id"), col("source"), col("pos").cast("long").as("pos"),
-            col("gram"), lit(true).as("__giant"))))
+    else gramsSmall.unionByName(gatherGrams(giantBase, minLen)
+      .join(broadcast(giantBase.select("doc_id", "source")), Seq("doc_id"))
+      .select(col("doc_id"), col("source"), col("pos").cast("long").as("pos"),
+        col("gram"), lit(true).as("__giant")))
   }
 
+  /** The one cross-span body, behind [[crossDocSpanRemoval]] and
+    * [[crossDocSpanRemovalFromIndex]]: literal grams → the multi-doc
+    * (source, gram) set (counted here, or read off the index) →
+    * qualifying window starts → the d34 island/complement fold for
+    * sub-threshold docs, the covered-position anti-join for giants.
+    */
   private def crossSpanImpl(docs: DataFrame, idCol: String,
       textCol: String, srcCol: String, minLen: Int,
       giantThreshold: Long, index: Option[DataFrame]): DataFrame = {
     require(minLen >= 1, s"minLen must be >= 1 (got $minLen)")
     val split = prepCross(docs, idCol, textCol, srcCol, giantThreshold)
-    crossSpanFromSplit(split, minLen, index)
-  }
-
-  /** The literal-carrier body over an already-prepared corpus split —
-    * shared by [[crossSpanImpl]] and the hashed carrier's
-    * candidate-mass reroute (which has paid prepCross already).
-    */
-  private def crossSpanFromSplit(
-      split: (DataFrame, DataFrame, Boolean), minLen: Int,
-      index: Option[DataFrame],
-      giantGrams: Option[DataFrame] = None): DataFrame = {
     val (smallBase, giantBase, hasGiants) = split
-    val grams = crossGrams(split, minLen, giantGrams)
+    val grams = crossGrams(split, minLen)
       .localCheckpoint(true) // multi-doc count + starts
     // hint("merge"): the multi-doc gram list can be corpus-scale on a
     // boilerplate-heavy corpus — the tieScan misestimated-broadcast rule
@@ -1656,161 +1584,16 @@ object SuffixArray {
             max(col("doc_id")).as("__dmax"))
           .where(col("__dmin") =!= col("__dmax")))
       .select("source", "gram").hint("merge")
-    val starts = grams.join(multi, Seq("source", "gram"), "left_semi")
+    val starts0 = grams.join(multi, Seq("source", "gram"), "left_semi")
       .select("doc_id", "pos", "__giant")
-    cutFromStarts(smallBase, giantBase, hasGiants, starts, minLen)
-  }
-
-  /** The shared cut tail of both cross-span carriers: qualifying
-    * window starts → the d34 island/complement fold for sub-threshold
-    * docs, the covered-position anti-join for giants.
-    */
-  private def cutFromStarts(smallBase: DataFrame, giantBase: DataFrame,
-      hasGiants: Boolean, starts: DataFrame, minLen: Int): DataFrame = {
-    val startsCk = if (hasGiants) starts.localCheckpoint(true) else starts
-    val spansSmall = startsCk.where(!col("__giant"))
+    val starts = if (hasGiants) starts0.localCheckpoint(true) else starts0
+    val spansSmall = starts.where(!col("__giant"))
       .select(col("doc_id"), col("pos").as("s"),
         (col("pos") + (minLen - 1)).as("e"))
     val small = cutSpans(smallBase, spansSmall, Seq("source"))
     if (!hasGiants) small
     else small.unionByName(cutCoveredGiant(giantBase,
-      startsCk.where(col("__giant")).select("doc_id", "pos"),
+      starts.where(col("__giant")).select("doc_id", "pos"),
       minLen, Seq("source")))
-  }
-
-  /** The HASHED gram carrier for [[crossDocSpanRemoval]] (the d25
-    * discipline, the scaladoc's own named upgrade): every data-sized
-    * shuffle — the (source, gram) distinct-doc count and the start
-    * semi-join — carries an 8-byte `xxhash64(gram)` instead of the
-    * literal minLen-char string, so at realistic ExactSubstr
-    * thresholds (minLen ≈ 250 chars ≈ 50 tokens) the shuffle width
-    * drops ~30×. Exactness is preserved by LITERAL RE-VERIFICATION:
-    * the multi-doc test at hash granularity depends only on
-    * (source, hash), which every occurrence of a gram shares, so the
-    * candidate relation contains EVERY occurrence of each candidate
-    * gram — a per-(source, literal gram) distinct-doc count over
-    * candidate rows alone therefore equals the true count. Hash
-    * collisions only ever ADD candidates (pruned here), never flip a
-    * verdict; output is byte-identical to the literal carrier
-    * (property-spec'd). The verification pass is candidate-sized —
-    * ~the true duplicated mass — so on mostly-clean corpora the
-    * literal strings ride only scan-local projections and one small
-    * shuffle. On candidate-DENSE corpora that premise inverts
-    * (re-verification re-pays the literal volume on top of the hash
-    * pass — measured 6.6× the literal carrier on an all-twin corpus
-    * at 10×), so the impl reads the exact candidate mass off the
-    * hash-level aggregate and reroutes to the literal carrier past
-    * `candRouteFraction` of positions ([[CandRouteFraction]]) —
-    * routing on a measured volume, the containmentPairsAuto
-    * discipline; the sunk cost is one 8-byte-wide pass.
-    */
-  /** The hashed carrier's scan-local projection for sub-threshold
-    * docs: (doc_id, source, pos, ghash, __giant=false) — the literal
-    * gram is hashed INSIDE the scan task and never leaves the
-    * projection, so 8 bytes per position hit the wire. Plan-gated
-    * (SuffixArraySpec): no Exchange anywhere in this relation.
-    */
-  private[graft] def hashGramRows(smallBase: DataFrame,
-      minLen: Int): DataFrame =
-    smallBase
-      .where(length(col("text")) >= minLen)
-      .select(col("doc_id"), col("source"),
-        posexplode(expr(
-          s"""transform(sequence(1, length(text) - ${minLen - 1}),
-             |  i -> xxhash64(substring(text, i, $minLen)))""".stripMargin))
-          .as(Seq("p0", "ghash")))
-      .select(col("doc_id"), col("source"),
-        (col("p0") + 1).cast("long").as("pos"), col("ghash"),
-        lit(false).as("__giant"))
-
-  /** The hash-level multi-doc prefilter, in ONE map-side-combinable
-    * pass (round 13 — the lean prefilter the round-12 docs promised,
-    * made EXACT instead of the >=2-occurrence superset): a
-    * (source, ghash) group spans >= 2 distinct docs iff its min and
-    * max doc_id differ, and min/max/count are all declarative partial
-    * aggregates, so the test costs one Exchange of combined
-    * per-map-task state where countDistinct(doc_id) paid two
-    * data-sized ones. `n_pos` carries the group's POSITION mass — the
-    * exact candidate volume the re-verification pass would pay, read
-    * for the price of one more aggregate column (the routing signal,
-    * see [[CandRouteFraction]]). Plan-gated (SuffixArraySpec): one
-    * Exchange, keyed (source, ghash), no Expand, no literal gram
-    * column anywhere.
-    */
-  private[graft] def hashPrefilter(hashes: DataFrame): DataFrame =
-    hashes.groupBy("source", "ghash")
-      .agg(min(col("doc_id")).as("__dmin"), max(col("doc_id")).as("__dmax"),
-        count(lit(1)).as("n_pos"))
-      .where(col("__dmin") =!= col("__dmax"))
-
-  private def crossSpanHashedImpl(docs: DataFrame, idCol: String,
-      textCol: String, srcCol: String, minLen: Int,
-      giantThreshold: Long,
-      candRouteFraction: Double = CandRouteFraction): DataFrame = {
-    require(minLen >= 1, s"minLen must be >= 1 (got $minLen)")
-    val split = prepCross(docs, idCol, textCol, srcCol, giantThreshold)
-    val (smallBase, giantBase, hasGiants) = split
-    // giant docs' literal grams assemble balanced either way
-    // ([[gatherGrams]] shuffles single chars); checkpointed because
-    // the re-verification pass reads them back by (doc, pos)
-    val gramsGiantOpt: Option[DataFrame] =
-      if (!hasGiants) None
-      else Some(gatherGrams(giantBase, minLen)
-        .join(broadcast(giantBase.select("doc_id", "source")), Seq("doc_id"))
-        .select(col("doc_id"), col("source"),
-          col("pos").cast("long").as("pos"), col("gram"))
-        .localCheckpoint(true))
-    val hashes = gramsGiantOpt.fold(hashGramRows(smallBase, minLen))(gg =>
-        hashGramRows(smallBase, minLen).unionByName(
-          gg.select(col("doc_id"), col("source"), col("pos"),
-            xxhash64(col("gram")).as("ghash"), lit(true).as("__giant"))))
-      .localCheckpoint(true) // multi-doc count + candidate semi
-    val multiH0 = hashPrefilter(hashes).localCheckpoint(true)
-    val candMass = multiH0.agg(coalesce(sum(col("n_pos")), lit(0L)))
-      .head().getLong(0)
-    val totalPos = hashes.count()
-    if (totalPos > 0 && candMass > candRouteFraction * totalPos)
-      // most positions are candidates: re-verification would re-pay
-      // the literal volume ON TOP of the hash pass — route to the
-      // literal carrier (sunk cost: the 8-byte pass just measured;
-      // the checkpointed giant grams ride along so the route never
-      // re-runs gatherGrams over the giants)
-      return crossSpanFromSplit(split, minLen, index = None,
-        giantGrams = gramsGiantOpt)
-    val multiH = multiH0.select("source", "ghash").hint("merge")
-    val cand = hashes.join(multiH, Seq("source", "ghash"), "left_semi")
-      .select("doc_id", "source", "pos", "__giant")
-      .localCheckpoint(true) // feeds both literal-fetch faces
-    // literal grams for CANDIDATE positions only: per-doc position
-    // arrays (bounded by the sub-threshold doc length — the d34
-    // direct-path budget) ship each doc's text once, never per row
-    val litSmall = {
-      val perDoc = cand.where(!col("__giant")).groupBy("doc_id")
-        .agg(collect_list(col("pos")).as("ps"))
-      smallBase.join(perDoc, Seq("doc_id"))
-        .select(col("doc_id"), col("source"),
-          explode(expr(s"""transform(ps, p ->
-            |  struct(p as pos,
-            |    substring(text, cast(p as int), $minLen) as gram))"""
-            .stripMargin)).as("e"))
-        .select(col("doc_id"), col("source"), col("e.pos").as("pos"),
-          col("e.gram").as("gram"), lit(false).as("__giant"))
-    }
-    val candLit = gramsGiantOpt.fold(litSmall) { gg =>
-      litSmall.unionByName(
-        gg.join(cand.where(col("__giant")).select("doc_id", "pos"),
-            Seq("doc_id", "pos"), "left_semi")
-          .select(col("doc_id"), col("source"), col("pos"), col("gram"),
-            lit(true).as("__giant")))
-    }.localCheckpoint(true) // verified-count + start semi
-    // same one-pass multi-doc test as the hash prefilter, at literal
-    // granularity over the candidate-sized relation
-    val multiV = candLit.groupBy("source", "gram")
-      .agg(min(col("doc_id")).as("__dmin"), max(col("doc_id")).as("__dmax"))
-      .where(col("__dmin") =!= col("__dmax"))
-      .select("source", "gram").hint("merge")
-    val starts = candLit.join(multiV, Seq("source", "gram"), "left_semi")
-      .select("doc_id", "pos", "__giant")
-    cutFromStarts(smallBase, giantBase, hasGiants, starts, minLen)
   }
 }

@@ -656,16 +656,10 @@ object DedupQueries {
         .orderBy("doc_id")
     }),
 
-    // d35 at a WIDE threshold (>= HashedGramCarrierMinLen = 33), so
-    // the default dispatch runs the HASHED gram carrier end-to-end
-    // against the SAME definitional oracle d35 uses at minLen=20:
-    // xxhash64 keys on the data-sized shuffles, the one-pass
-    // min/max-doc_id multi-doc prefilter (SuffixArray.hashPrefilter —
-    // exactly countDistinct >= 2 at ONE map-side-combined exchange),
-    // the candidate-mass route decision and the literal
-    // re-verification all sit on an oracle-checked path (not just the
-    // property spec). The oracle knows nothing of carriers — identical
-    // hashes at both thresholds ARE the carrier-equivalence statement.
+    // d35 at a WIDE threshold: the same literal gram carrier against
+    // the SAME definitional oracle d35 uses at minLen=20, so the
+    // 40-char keys on the data-sized shuffles sit on an oracle-checked
+    // path too (not just the property spec)
     "d37_wide_cross_span" -> ((s, d) => {
       SuffixArray.crossDocSpanRemoval(Tables.load(s, d, "documents"),
           "doc_id", "text", "source", minLen = WideCrossSpanMinLen)
@@ -863,16 +857,11 @@ object DedupQueries {
     */
   private val CrossSpanMinLen = 20
 
-  /** d37's span threshold: past `HashedGramCarrierMinLen` (33), so
-    * the DEFAULT crossDocSpanRemoval dispatch runs the HASHED
-    * carrier — xxhash64 keys, the one-pass min/max-doc_id multi-doc
-    * prefilter (`SuffixArray.hashPrefilter`), the
-    * candidate-mass route decision and the literal re-verification
-    * all sit on this query's oracle-checked path (d35 at minLen=20
-    * exercises only the literal carrier). At the verify SF exactly
-    * 2 of 500 docs carry ≥40-char cross-doc spans (the planted
-    * near-exact pair) — thin but non-vacuous in BOTH directions, and
-    * the md5 gate verifies all 500 rewrites byte-for-byte.
+  /** d37's span threshold: twice d35's window, so the gram carrier
+    * ships 40-char keys. At the verify SF exactly 2 of 500 docs carry
+    * ≥40-char cross-doc spans (the planted near-exact pair) — thin but
+    * non-vacuous in BOTH directions, and the md5 gate verifies all
+    * 500 rewrites byte-for-byte.
     */
   private val WideCrossSpanMinLen = 40
 

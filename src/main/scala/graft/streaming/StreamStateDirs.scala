@@ -191,21 +191,26 @@ private[streaming] object StreamStateDirs {
   }
 
   /** `dir` read with `schema`, or an empty frame of that schema when
-    * the directory does not exist yet.
+    * the directory does not exist yet. Existence is checked before
+    * the read, so state that is not there yet costs no logged
+    * FileNotFoundException.
     */
   def readOrEmpty(spark: SparkSession, dir: String,
-      schema: StructType): DataFrame =
-    Try(spark.read.schema(schema).parquet(dir)) match {
+      schema: StructType): DataFrame = {
+    def empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    if (!exists(spark, dir)) empty
+    else Try(spark.read.schema(schema).parquet(dir)) match {
       case Success(df) => df
-      // ONLY a missing directory means "no state yet". Any other read
+      // ONLY a missing directory means "no state yet" — here, one
+      // removed between the check and the read. Any other read
       // failure (IO hiccup, corrupt footer, permissions) must
       // PROPAGATE and fail the micro-batch so the stream retries —
       // swallowing it would settle the batch against an empty history
       // and silently re-admit every previously-seen document.
-      case Failure(e) if pathMissing(e) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+      case Failure(e) if pathMissing(e) => empty
       case Failure(e) => throw e
     }
+  }
 
   /** True iff the failure chain means "this path does not exist" —
     * the ONE failure a state reader may treat as empty state. The

@@ -23,7 +23,7 @@ class LakeMaintenanceSpec extends AnyFunSuite with SparkSpec {
       .flatMap { case (n, c) =>
         XmlFlatten.parse(c.getBytes("UTF-8"), n, "md5", XmlFlatten.DeterministicId)
       }.toDF().repartition(8)
-    IngestPipeline.writeMergedLake(spark, tall, lake)
+    TagTables.writeTall(tall, IngestPipeline.elementsPath(lake))
     val beforeRows = spark.read.parquet(IngestPipeline.elementsPath(lake))
       .select("element_id", "text_value").collect()
       .map(r => r.getString(0) -> Option(r.getString(1))).toMap

@@ -355,9 +355,9 @@ class SuffixArraySpec extends AnyFunSuite with SparkSpec {
       "the boilerplate repeat must be found under the default budget")
   }
 
-  test("hashed gram carrier is byte-identical to the literal carrier") {
-    // long shared boilerplate (85 chars) so minLen = 40 — past the
-    // hashed-carrier auto threshold — is non-vacuous both ways
+  test("cross-span removal equals brute force at minLen 5/20/40") {
+    // long shared boilerplate (85 chars) so minLen = 40 (d37's width)
+    // is non-vacuous
     val boiler = "THIS LONG SHARED BOILERPLATE SENTENCE REPEATS ACROSS " +
       "DOCUMENTS VERBATIM DIGITS 0123456789"
     val docs: Seq[(Long, String, String)] = Seq(
@@ -367,53 +367,25 @@ class SuffixArraySpec extends AnyFunSuite with SparkSpec {
       (4L, s"other-source prefix $boiler", "s2"),
       (5L, s"twin $boiler twin", "s2"),
       (6L, "tiny", "s2")) ++
-      // dense 3-letter random docs: many short repeats → the hashed
-      // path's candidate set is data-sized, stressing re-verification
+      // dense 3-letter random docs: many short repeats, so most
+      // positions are cut at the small widths
       (0 until 15).map { i =>
         (100L + i, (0 until (10 + rnd.nextInt(40)))
           .map(_ => ('a' + rnd.nextInt(3)).toChar).mkString, s"r${i % 3}")
       }
     val df = docs.toDF("doc_id", "text", "source")
-    def key(rows: Array[org.apache.spark.sql.Row]) = rows
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        r.getLong(3), r.getString(4))).sorted.toSeq
     for (minLen <- Seq(5, 20, 40); thr <- Seq(1L << 30, 24L)) {
-      val literal = SuffixArray.crossDocSpanRemoval(df, "doc_id", "text",
-        "source", minLen, giantThreshold = thr,
-        hashedCarrierFrom = Int.MaxValue).collect()
-      // candRouteFraction pinned high: this exercises the PURE hashed
-      // path (the dense 3-letter docs would otherwise trip the
-      // candidate-mass reroute and quietly compare literal to literal)
-      val hashed = SuffixArray.crossDocSpanRemoval(df, "doc_id", "text",
-        "source", minLen, giantThreshold = thr,
-        hashedCarrierFrom = 1,
-        candRouteFraction = Double.MaxValue).collect()
-      assert(key(hashed) === key(literal),
-        s"hashed carrier diverged from literal at minLen=$minLen thr=$thr")
-      // the candidate-mass reroute (candRouteFraction = 0 forces it):
-      // routed output must be the same bytes — the route is a carrier
-      // choice, never a semantics choice
-      val routed = SuffixArray.crossDocSpanRemoval(df, "doc_id", "text",
-        "source", minLen, giantThreshold = thr,
-        hashedCarrierFrom = 1, candRouteFraction = 0.0).collect()
-      assert(key(routed) === key(literal),
-        s"routed carrier diverged from literal at minLen=$minLen thr=$thr")
-      // anchor to brute-force truth, not just to each other
+      val got = SuffixArray.crossDocSpanRemoval(df, "doc_id", "text",
+        "source", minLen, giantThreshold = thr).collect()
+        .map(r => r.getLong(0) ->
+          ((r.getLong(2), r.getLong(3), r.getString(4)))).toMap
       val ref = refCrossRemove(docs, minLen)
-      val got = literal.map(r => r.getLong(0) ->
-        ((r.getLong(2), r.getLong(3), r.getString(4)))).toMap
-      docs.foreach { case (id, text, _) =>
+      docs.foreach { case (id, _, _) =>
         assert(got(id) === ref(id),
-          s"literal carrier diverged from brute force for doc $id " +
+          s"cross removal diverged from brute force for doc $id " +
             s"at minLen=$minLen thr=$thr")
       }
     }
-    // the default auto-switch picks hashed at minLen >= 33: same bytes
-    val auto = SuffixArray.crossDocSpanRemoval(df, "doc_id", "text",
-      "source", 40).collect()
-    val lit40 = SuffixArray.crossDocSpanRemoval(df, "doc_id", "text",
-      "source", 40, hashedCarrierFrom = Int.MaxValue).collect()
-    assert(key(auto) === key(lit40), "auto-routed hashed carrier diverged")
   }
 
   test("crossSpanIndex merge of disjoint halves reproduces the direct removal") {
@@ -478,9 +450,8 @@ class SuffixArraySpec extends AnyFunSuite with SparkSpec {
     def key(rows: Array[org.apache.spark.sql.Row]) = rows
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getString(4))).sorted.toSeq
-    // minLen 20 runs the literal carrier, 40 the hashed one (default
-    // dispatch) — both route doc 1 through gatherGrams + the covered
-    // cut when the threshold sits below its length
+    // both widths route doc 1 through gatherGrams + the covered cut
+    // when the threshold sits below its length
     for (minLen <- Seq(20, 40)) {
       val direct = SuffixArray.crossDocSpanRemoval(df, "doc_id", "text",
         "source", minLen, giantThreshold = 1L << 30).collect()
@@ -495,35 +466,6 @@ class SuffixArraySpec extends AnyFunSuite with SparkSpec {
       assert(cleaned.length < n && cleaned.length > n - plants.size * 200,
         "cut volume must be the planted spans, not wholesale")
     }
-  }
-
-  test("hashed carrier plan: scan-local hashing, one-exchange prefilter, no countDistinct") {
-    // the round-12 verdict's weak mark: the docs promised a lean
-    // one-pass hash prefilter while the code aggregated
-    // countDistinct(doc_id) — two data-sized exchanges. This gate pins
-    // the shipped shape: (a) hashGramRows is exchange-free (the
-    // literal gram dies inside the scan projection; only the 8-byte
-    // xxhash64 survives), (b) hashPrefilter is ONE exchange keyed
-    // (source, ghash) with map-side partial min/max/count and no
-    // Expand / distinct-aggregate machinery anywhere.
-    val base = Seq(
-      (1L, "alpha shared boilerplate text long enough for windows", "s1"),
-      (2L, "beta shared boilerplate text long enough for windows", "s1"),
-      (3L, "gamma unrelated", "s2"))
-      .toDF("doc_id", "text", "source")
-    val rows = SuffixArray.hashGramRows(base, 40)
-    val rp = rows.queryExecution.executedPlan.toString
-    assert(rp.contains("xxhash64"), rp)
-    assert(!rp.contains("Exchange"), rp)
-    val pre = SuffixArray.hashPrefilter(rows)
-    val pp = pre.queryExecution.executedPlan.toString
-    assert("Exchange".r.findAllMatchIn(pp).size === 1, pp)
-    assert(pp.contains("hashpartitioning(source"), pp)
-    assert(pp.contains("ghash"), pp)
-    assert(pp.contains("partial_min"), pp)
-    assert(pp.contains("partial_max"), pp)
-    assert(!pp.contains("Expand"), pp)
-    assert(!pp.contains("distinct"), pp)
   }
 
   test("null and empty texts yield no suffix rows, not errors") {
