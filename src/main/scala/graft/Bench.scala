@@ -119,65 +119,12 @@ object Bench {
         f"bench: STARTING HOT at loadavg $loadBefore%.2f after ${waited}s " +
           "wait — artifact tagged contaminated")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle partitions sized to the DATA, not the cores: at sf0.1
-    // (~50 MB) more than ~8 partitions is pure scheduling overhead
-    // (measured: 32 partitions on 32 threads is 1.5x slower than 4/4).
-    // At cluster scale this would be data/128MB; AQE coalesces down.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.min(cpus.toInt, 8).toString)
-    // Codegen class cache (STATIC conf, must be set at first-session
-    // creation): Spark's default 100 entries thrashes under a 229-query
-    // suite — every timed pass regenerates + recompiles + class-loads
-    // every plan's codegen (the warmup pass's compilations are evicted
-    // long before the timed pass returns to the same query, and the
-    // d32/p07 driver loops alone mint hundreds of distinct plans),
-    // churning the JIT code cache; the churn's sweep storms were the
-    // wandering 2–10× in-suite-vs-solo victims (d22 66 s in r13, p07
-    // 74 s in the r14 after-stash run). Measured full-suite A/B on
-    // identical code: 100 → 430.1 s, 2000 → 240.5 s, 8000 → 218.4 s,
-    // with zero >0.5 s per-query regressions and in-suite ≈ solo for
-    // every query at 8000. Scale-independent (a driver-side compile
-    // cache — cluster drivers reuse generated classes the same way);
-    // env-overridable for A/B.
-    val codegenCache =
-      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.codegen.cache.maxEntries", codegenCache)
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shuffle-file cleanup normally fires asynchronously from the
-      // ContextCleaner; blocking keeps the 360-execution suite from
-      // stacking dead shuffle files faster than they're removed
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      // the status stores retain per-execution plan graphs/metrics and
-      // per-stage/task rows even with the UI off; at 120 queries x 3
-      // passes (x dozens of AQE stages each) that retained state is
-      // pure growth — keep only a handful for post-mortem
-      .config("spark.sql.ui.retainedExecutions", "20")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // BENCH_ONLY=d02_minhash_lsh,d04_ngram_jaccard runs a subset — for
-    // iterating on one query without paying the full-suite wall time.
-    // Unknown names fail loudly: a misspelled subset silently timing an
-    // empty suite would read as a 0-second bench.
-    val names = sys.env.get("BENCH_ONLY") match {
-      case Some(list) =>
-        val want = list.split(',').map(_.trim).filter(_.nonEmpty).toSet
-        val unknown = want -- SparkEntry.queries.keySet
-        if (unknown.nonEmpty)
-          throw new IllegalArgumentException(
-            s"BENCH_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-        SparkEntry.queries.keys.toSeq.filter(want).sorted
-      case None => SparkEntry.queries.keys.toSeq.sorted
-    }
+    // iterating on one query without paying the full-suite wall time
+    val names = Cli.envSubset("BENCH_ONLY", SparkEntry.queries.keys.toSeq.sorted)
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // warmup (untimed): JIT, codegen cache, parquet footers. Errors here
     // are ignored only because the timed pass below records them.

@@ -36,24 +36,11 @@ object CurateMain {
     "[--shard-budget <n>] [--id-col c] [--text-col c] [--source-col c]"
 
   def main(args: Array[String]): Unit = {
-    val flagKeys = Set("--benchmark", "--format", "--tau", "--shard-budget",
-      "--id-col", "--text-col", "--source-col")
-    val pos = Seq.newBuilder[String]
-    val kv = scala.collection.mutable.Map.empty[String, String]
-    var i = 0
-    while (i < args.length) {
-      if (flagKeys.contains(args(i))) {
-        require(i + 1 < args.length, s"missing value for ${args(i)}\n$usage")
-        require(!kv.contains(args(i)), s"duplicate ${args(i)}\n$usage")
-        kv(args(i)) = args(i + 1); i += 2
-      } else {
-        require(!args(i).startsWith("--"), s"unknown flag: ${args(i)}\n$usage")
-        pos += args(i); i += 1
-      }
-    }
-    val positional = pos.result()
-    require(positional.size == 2, usage)
-    val Seq(corpusPath, outDir) = positional
+    val a = Cli.parse(args, usage, positional = 2 to 2, valueKeys = Set(
+      "--benchmark", "--format", "--tau", "--shard-budget", "--id-col",
+      "--text-col", "--source-col"))
+    val kv = a.values
+    val Seq(corpusPath, outDir) = a.positional
     val format = kv.getOrElse("--format", "jsonl")
     require(format == "jsonl" || format == "parquet",
       s"--format must be jsonl or parquet, got $format\n$usage")
@@ -63,13 +50,7 @@ object CurateMain {
     val textCol = kv.getOrElse("--text-col", "text")
     val sourceCol = kv.getOrElse("--source-col", "source")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, corpusPath, outDir, format, kv.get("--benchmark"),
       tau, budget, idCol, textCol, sourceCol)

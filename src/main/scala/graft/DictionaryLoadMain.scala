@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.etl.JdbcMirror
 import graft.sources.DictionaryLoader
 
@@ -43,11 +41,10 @@ object DictionaryLoadMain {
     "usage: DictionaryLoadMain [--element-src <url-or-path>] [--field-src <url-or-path>] " +
       "[--landing-dir <dir>] [--jdbc-url <url>] [--jdbc-schema <schema>] [--parquet-out <dir>]"
 
-  private val ValueKeys = Set("--element-src", "--field-src", "--landing-dir",
-    "--jdbc-url", "--jdbc-schema", "--parquet-out")
-
   def main(args: Array[String]): Unit = {
-    val kv = VendorImportMain.parseKv(args, ValueKeys, usage)
+    val kv = Cli.parse(args, usage, positional = 0 to 0, valueKeys = Set(
+      "--element-src", "--field-src", "--landing-dir", "--jdbc-url",
+      "--jdbc-schema", "--parquet-out")).values
     // --jdbc-url, else GRAFT_JDBC_URL (reference parity: it reads the
     // connection from the environment); a refresh still needs SOME sink
     val jdbcCfg = VendorImportMain.resolveJdbc(kv)
@@ -64,12 +61,7 @@ object DictionaryLoadMain {
     require(!specs.exists(s => isHttp(s._2)) || kv.contains("--landing-dir"),
       s"--landing-dir is required when a source is an http(s) URL\n$usage")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       val fetcher = new DictionaryLoader.HttpFetcher()

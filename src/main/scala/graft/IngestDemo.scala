@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.etl.{FileLifecycle, IngestPipeline, JdbcMirror}
 
 /** CLI surface for the XML ingest path — the reference's primary
@@ -28,37 +26,17 @@ object IngestDemo {
     "[--archive-dir <dir>] [--error-dir <dir>] [--require-version <v>]"
 
   def main(args: Array[String]): Unit = {
-    val flagKeys = Set("--archive-dir", "--error-dir", "--require-version")
-    val (positional, flags) = {
-      val pos = Seq.newBuilder[String]
-      val kv = scala.collection.mutable.Map.empty[String, String]
-      var i = 0
-      while (i < args.length) {
-        if (flagKeys.contains(args(i))) {
-          require(i + 1 < args.length, s"missing value for ${args(i)}\n$usage")
-          require(!kv.contains(args(i)), s"duplicate ${args(i)}\n$usage")
-          kv(args(i)) = args(i + 1); i += 2
-        } else {
-          require(!args(i).startsWith("--"), s"unknown flag: ${args(i)}\n$usage")
-          pos += args(i); i += 1
-        }
-      }
-      (pos.result(), kv.toMap)
-    }
-    require(positional.size >= 2 && positional.size <= 3, usage)
-    val Seq(xmlGlob, lakeDir) = positional.take(2)
-    val jdbcUrl = positional.lift(2)
+    val a = Cli.parse(args, usage, positional = 2 to 3,
+      valueKeys = Set("--archive-dir", "--error-dir", "--require-version"))
+    val flags = a.values
+    val Seq(xmlGlob, lakeDir) = a.positional.take(2)
+    val jdbcUrl = a.positional.lift(2)
     // the version gate lives in the JDBC mirror — a gated run without a
     // mirror target would silently ingest ungated, so refuse up front
     require(flags.get("--require-version").isEmpty || jdbcUrl.nonEmpty,
       s"--require-version needs a jdbcUrl (the gate guards the mirror)\n$usage")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val r = IngestPipeline.ingestDirectory(spark, xmlGlob, lakeDir)

@@ -1,12 +1,18 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Writes `PLANS.md`: the formatted physical plan of each headline
   * query at sf0.001 — the artifact backing the plan-quality claims
   * (pushdown, pruning, broadcast selection, no cartesian fallbacks).
-  * Regenerate with: sbt "runMain graft.Plans [outFile]"
+  * Regenerate with: sbt "runMain graft.Plans [outFile] [query,...]"
+  *
+  * A query list after the output file writes those plans instead of the
+  * headline set — the per-round before/after evidence a verdict checks
+  * optimization claims against, e.g.
+  * `runMain graft.Plans plans/r15/after.md d32_cross_doc_repeats,p07_substring_funnel`.
+  * The session runs a fixed 4 threads, so the plan text does not
+  * depend on the host.
   */
 object Plans {
 
@@ -248,13 +254,11 @@ object Plans {
     "d37_wide_cross_span")
 
   def main(args: Array[String]): Unit = {
+    require(args.length <= 2, "usage: Plans [outFile] [query,...]")
     val out = args.headOption.getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val names = args.lift(1).fold(headline)(
+      Cli.subset("Plans query list", _, SparkEntry.queries.keys.toSeq.sorted))
+    val spark = GraftSession.builder(cpus = 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
     val sb = new StringBuilder
@@ -276,12 +280,13 @@ object Plans {
     sb ++= "post-checkpoint stages. CI enforces the load-bearing shapes in\n"
     sb ++= "PlanSpec and sibling specs; this file is the human-readable\n"
     sb ++= "evidence, regenerated per round.\n"
-    headline.foreach { name =>
+    names.foreach { name =>
       val plan = SparkEntry.queries(name)(spark, sf)
         .queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       sb ++= s"\n## $name\n\n```\n$plan```\n"
     }
+    Option(Paths.get(out).getParent).foreach(Files.createDirectories(_))
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out")
     spark.stop()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Curation, Dedup, Graph, Pipeline, Segmentation, Similarity}
@@ -18,7 +18,8 @@ import graft.sources.Tables
   * to prove it fails fast instead of hanging.
   *
   * Usage: `SPARK_GRAFT_SF_DIR=... runMain graft.ScaleStress [scales]`
-  * (default scales 1,3,10). One JSON line per measurement on stdout;
+  * (default scales 1,3,10); `SCALE_OPS=d11,d11_guard` runs only the
+  * named ops and guard probes. One JSON line per measurement on stdout;
   * quiet machine required for meaningful curves (the bench rules).
   */
 object ScaleStress {
@@ -65,21 +66,7 @@ object ScaleStress {
   def main(args: Array[String]): Unit = {
     val scales = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 3, 10)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same codegen-cache sizing as Bench (see the comment there):
-      // the iterative ops here mint hundreds of distinct plans per
-      // scale point; the default 100-entry cache adds recompile noise
-      // to exactly the curves this harness exists to measure
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000"))
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs0 = Tables.load(spark, sfDir, "documents")
@@ -228,20 +215,341 @@ object ScaleStress {
             s"IF(j < 8 AND ((($i) >> j) % 2) = 1, -x, x))").as("embedding"))
       }.reduce(_ unionByName _)
 
-    for (k <- scales) {
-      val corpus = withMutations(inflateDocs(k)).localCheckpoint(true)
-      val plain = inflateDocs(k).localCheckpoint(true)
-      val events = inflateEvents(k).localCheckpoint(true)
-      val vecs = inflateVecs(k).localCheckpoint(true)
+    // The scale inputs the op thunks read. Each pass of the scale loop
+    // binds them before it runs a thunk; the thunks are declared once,
+    // ahead of the loop, so SCALE_OPS is checked before any input is built.
+    var corpus, plain, events, vecs, batch17, histBands17, histLabels17,
+      batch36, histIx36: DataFrame = null
+
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "d02" -> (() =>
+        Dedup.minHashCandidatePairs(corpus, "doc_id", "text")),
+      "d06" -> (() => Dedup.connectedComponents(
+        Dedup.minHashCandidatePairs(corpus, "doc_id", "text"))),
+      "d11" -> (() => Dedup.prefixFilterPairs(corpus, "doc_id", "text",
+        tauNum = 9, tauDen = 10,
+        tokens = t => array_distinct(Dedup.shingleHashes(t)))),
+      "c04" -> (() => {
+        val labeled = Dedup
+          .connectedComponentsOverBuckets(corpus, "doc_id", "text")
+          .join(corpus, col("id") === col("doc_id"))
+          .select(col("label"), col("doc_id"),
+            length(col("text")).cast("long").as("n_chars"))
+        Curation.keepBest(labeled, "label", "doc_id", col("n_chars"))
+      }),
+      "g01" -> (() => Graph.pageRank(Graph.chainEdges(events,
+        Seq(col("event_type"), date_trunc("hour", col("ts"))),
+        "user_id", "ts"), 5)),
+      "p01" -> (() => Pipeline.curate(plain, emptyBench,
+        "doc_id", "text", "source", 0.5, 4096L)),
+      // incremental cluster maintenance: the timed work is ONLY the
+      // refresh — probe join + batch-edge CC + label remap over the
+      // pre-built (checkpointed) history state above — so the curve
+      // measures the "refresh ∝ batch, never history²" claim itself
+      "d17" -> (() => Dedup.incrementalClusters(histLabels17,
+        Dedup.incrementalMinHashCandidates(
+          histBands17, batch17, "doc_id", "text"))),
+      // k-NN graph: copies sign-flip the first 8 dims by the copy
+      // index, XOR-remapping the 8-bit sign bucket — copies occupy
+      // DISJOINT buckets, so density (and per-bucket m² cost) stays
+      // constant as k grows: the measured curve demonstrates the
+      // "size bits to corpus/2^bits" rule from the scaladoc instead
+      // of the k² blowup identical copies would fake
+      "s15" -> (() => Similarity.knnGraph(vecs, k = 3, bits = 8)),
+      // the banded variant under MEASURED-OCCUPANCY bits (the r8 fix
+      // for r7's 2.28 tail exponent): scaledBits seeds from the mean
+      // model, then targetP99Occupancy escalates bitsPerBand until
+      // the measured p99 bucket size meets the target — real SRP
+      // skew is sized against what the buckets actually hold, not
+      // what n/2^bits predicts
+      "s17" -> (() => {
+        val n = vecs.count()
+        Similarity.knnGraphBanded(vecs, k = 3, bands = 2,
+          bitsPerBand = Similarity.scaledBits(n, targetBucketSize = 128L),
+          targetP99Occupancy = 128L)
+      }),
+      // the e14-class hazard vs its r7 fix, measured side by side:
+      // the ntile form's two global windows funnel every user into
+      // one task; the threshold form's only window runs over the
+      // distinct-VALUE axis. Both thunks pin the user-level relation
+      // first (quantileTiles runs several driver actions over it —
+      // an unpinned rfm would recompute the events groupBy per
+      // action and the curve would measure recomputation, not the
+      // operator)
+      "e14_ntile" -> (() => {
+        import org.apache.spark.sql.expressions.Window
+        val rfm = rfmOf(events).localCheckpoint(true)
+        val rW = Window.orderBy(col("recency_days").asc, col("user_id"))
+        val fW = Window.orderBy(col("frequency").desc, col("user_id"))
+        rfm.withColumn("r", ntile(3).over(rW).cast("long"))
+          .withColumn("f", ntile(3).over(fW).cast("long"))
+      }),
+      "e15" -> (() => Segmentation.quantileTiles(
+        rfmOf(events).localCheckpoint(true),
+        Seq(("recency_days", true), ("frequency", false)), k = 3)),
+      // containment join (r7 cont.): the asymmetric prefix filter —
+      // probe prefixes join the FULL token relation, so its curve is
+      // the one to watch (the cost model says Σ dfp·(df−1), linear
+      // while rare-token df stays bounded under inflation)
+      "d21" -> (() => Dedup.containmentPairs(
+        withExcerpts(plain), "doc_id", "text",
+        tauNum = 9, tauDen = 10,
+        tokens = t => array_distinct(Dedup.shingleHashes(t)))),
+      // the pre-blocked escape hatch (r9): containment within equal
+      // `source` only — the blocking contract a corpus past the
+      // unblocked budget opts into. Excerpt twins inherit their
+      // base's source, so every planted pair stays in-block; the
+      // curve should keep running where plain d21 guard-trips
+      // (measured 30× margin was 1.47×, one 20-way block's savings)
+      "d21b" -> (() => Dedup.containmentPairs(
+        withExcerpts(plain), "doc_id", "text",
+        tauNum = 9, tauDen = 10,
+        tokens = t => array_distinct(Dedup.shingleHashes(t)),
+        blockBy = Some(col("source")))),
+      // the AUTO router (r10): exact whole-corpus while the measured
+      // volume fits, pre-blocked when it doesn't — at 30× this must
+      // run GREEN without manual intervention where plain d21
+      // guard-trips (margin 1.47×), because the router takes the
+      // blocked path on the same measured signal
+      "d21auto" -> (() => Dedup.containmentPairsAuto(
+        withExcerpts(plain), "doc_id", "text",
+        tauNum = 9, tauDen = 10, blockBy = col("source"))),
+      // k-core peeling (r7 cont.): copies are structurally identical
+      // disjoint subgraphs, so cascade DEPTH (and hence round count)
+      // is scale-invariant — the curve isolates per-round work ∝
+      // surviving edges
+      "g08" -> (() => Graph.kCore(Graph.chainEdges(events,
+        Seq(col("event_type"), date_trunc("hour", col("ts")),
+          pmod(col("user_id"), lit(16L))), "user_id", "ts"),
+        k = 6, maxRounds = 24)),
+      // HyperBall (r9): per-round cost is one edges⋈registers join +
+      // a (node, bucket) max-merge — state per node is CONSTANT (64
+      // registers), so the curve should track |edges| linearly, the
+      // property that separates it from the quadratic exact closure
+      "g12" -> (() => Graph.hyperBall(Graph.chainEdges(events,
+        Seq(col("event_type"), date_trunc("hour", col("ts"))),
+        "user_id", "ts"), radius = 2)),
+      // CDC chunk dedup (r9): one generated pass per doc + a chunk-
+      // hash groupBy over the ~n/31-row chunk relation — d01's scale
+      // shape; the curve guards against the per-character-explode
+      // regression the operator was designed to avoid
+      "d27" -> (() => {
+        val ck = corpus.select(col("source"),
+          explode(graft.functions.TextHashExpressions
+            .cdc_chunks(col("text"), 8, 31)).as("chunk"))
+        ck.select(col("source"), md5(col("chunk")).as("h"),
+            length(col("chunk")).cast("long").as("len"))
+          .groupBy("source", "h")
+          .agg(count(lit(1)).as("cnt"), min("len").as("len"))
+          .groupBy("source").agg(
+            sum("cnt").as("n_chunks"),
+            count(lit(1)).as("n_distinct_chunks"),
+            sum((col("cnt") - 1) * col("len")).as("dup_chars"))
+      }),
+      // the q54/c21 pair, measured side by side (the e14/e15 story
+      // for row numbering): the naive global row_number funnels the
+      // corpus into ONE task; the two-pass granule form distributes
+      // all but the granule-totals window
+      "c21_naive" -> (() => {
+        import org.apache.spark.sql.expressions.Window
+        val h = plain.withColumn("__h",
+          Dedup.md5Hash32(col("doc_id").cast("string")))
+        h.withColumn("shuffle_pos",
+          row_number().over(Window.orderBy(col("__h"), col("doc_id")))
+            .cast("long") - 1)
+      }),
+      "c21" -> (() => graft.ops.Layout.globalIndex(
+        plain.withColumn("__h",
+          Dedup.md5Hash32(col("doc_id").cast("string"))),
+        col("__h"), col("doc_id"), granule = 1L << 24,
+        out = "shuffle_pos")),
+      // suffix ranks (r9): n (doc, pos, rank) rows, one head
+      // exchange + log₄ in-partition window-sort rounds — expected
+      // ~linear in corpus chars; tie depth (hence round count) is
+      // scale-invariant because copies are vowel-rotated, never
+      // repeated
+      "d30" -> (() => graft.ops.SuffixArray
+        .suffixRanks(plain, "doc_id", "text")),
+      // winnowing (r9): one generated pass per doc, then the d01
+      // groupBy/join shape over ~2/(w+1) of the gram volume
+      "d29" -> (() => Dedup.winnowStats(plain, "doc_id", "text")),
+      // generalized suffix array (r9): positions scale ×k while
+      // copies stay mutually dissimilar (vowel rotation), so tie
+      // depth — hence round count — is scale-invariant and the
+      // curve should track corpus chars linearly
+      "d32" -> (() => graft.ops.SuffixArray
+        .crossDocRepeats(plain, "doc_id", "text", "source")),
+      // skewed corpus (r10): ONE document 100× the median length —
+      // the shape the round-9 verdict flagged. It stays under the
+      // giant threshold, so this row measures the WINDOW path's
+      // tolerance: one outlier task among thousands of small
+      // groups, the curve must stay within noise of plain d30
+      "d30skew" -> (() => graft.ops.SuffixArray
+        .suffixRanks(withMedianOutlier(plain), "doc_id", "text")),
+      // genuinely giant outlier (r10): one ~3M-char document — PAST
+      // the 2M giant threshold, so its rank rounds run the
+      // range-partitioned WIDE path (the implemented d30/d31
+      // fallback) while the normal docs stay windowed; the curve is
+      // "constant wide-path outlier + k×-growing windowed corpus",
+      // previously a single-task serialization
+      "d30giant" -> (() => graft.ops.SuffixArray
+        .suffixRanks(withGiantDoc(plain), "doc_id", "text")),
+      // the suffix-array removal face (r10): d31's chain + per-doc
+      // island merge + complement fold — expected to track d31
+      "d34" -> (() => graft.ops.SuffixArray
+        .removeRepeatedSpans(plain, "doc_id", "text", minLen = 12)),
+      // d34 with the ~3M-char giant (r11): the giant doc reroutes
+      // around the doc-bounded pair window and collect_list array
+      // via the gram-coverage identity — previously the one
+      // unguarded cliff left in the family
+      "d34giant" -> (() => graft.ops.SuffixArray
+        .removeRepeatedSpans(withGiantDoc(plain), "doc_id", "text",
+          minLen = 12)),
+      // d32 with a giant single-doc source (r11): round 0 dispatches
+      // the >2M-char concatenation to the wide gram + class-level
+      // stable rank while every normal source stays windowed —
+      // previously that source's round 0 sorted in ONE task
+      "d32giant" -> (() => graft.ops.SuffixArray
+        .crossDocRepeats(withGiantDoc(plain), "doc_id", "text",
+          "source")),
+      // cross-doc span removal (r11): one gram pass + a
+      // (source, gram) distinct-doc count + the d34 cut faces —
+      // the d19 scale shape at char granularity, expected
+      // near-linear
+      "d35" -> (() => graft.ops.SuffixArray
+        .crossDocSpanRemoval(plain, "doc_id", "text", "source",
+          minLen = 20)),
+      // d35 at the deployed ExactSubstr threshold (r12): minLen=250
+      // on the mutated-twin corpus (every >=250-char doc's windows
+      // recur verbatim in its twin) — the regime where the gram
+      // carrier's minLen-char shuffle keys are widest
+      "d35wide" -> (() => graft.ops.SuffixArray
+        .crossDocSpanRemoval(corpus, "doc_id", "text", "source",
+          minLen = 250)),
+      // the same threshold on a mostly-clean corpus (per-doc salts
+      // break every cross-doc run outside src0): candidates are
+      // sparse, but every position still ships its 250-char key
+      "d35widec" -> (() => graft.ops.SuffixArray
+        .crossDocSpanRemoval(saltedClean(plain), "doc_id", "text",
+          "source", minLen = 250)),
+      // d35 with the ~3M-char giant (r12): the giant's grams route
+      // through gatherGrams + cutCoveredGiant (d34giant's stages)
+      // plus the (source, gram) distinct-doc count — the dedicated
+      // giant-path row d34giant has and d35 lacked
+      "d35giant" -> (() => graft.ops.SuffixArray
+        .crossDocSpanRemoval(withGiantDoc(plain), "doc_id", "text",
+          "source", minLen = 20)),
+      // d36's settle face (round 13): refresh-only — index the batch
+      // half + merge with the prebuilt history index by pure algebra;
+      // the curve must track the BATCH, not the corpus (history never
+      // re-grams)
+      "d36ix" -> (() => graft.ops.SuffixArray.crossSpanIndexMerge(
+        histIx36,
+        graft.ops.SuffixArray.crossSpanIndex(batch36, "doc_id", "text",
+          "source", minLen = 20))),
+      // the full d36 refresh INCLUDING the rewrite from the merged
+      // index — corpus-sized by contract (the cut face rewrites every
+      // doc); expected ≈ d35 minus the history gram recount
+      "d36" -> (() => graft.ops.SuffixArray.crossDocSpanRemovalFromIndex(
+        corpus,
+        graft.ops.SuffixArray.crossSpanIndexMerge(histIx36,
+          graft.ops.SuffixArray.crossSpanIndex(batch36, "doc_id", "text",
+            "source", minLen = 20)),
+        "doc_id", "text", "source", minLen = 20)),
+      // the d32 tie-mass guard row (r12): the same call as d32 at
+      // the DEFAULT budget — at 30x the frozen-level tie mass
+      // (~18.7M) exceeds the 8M budget and the row records the
+      // refusal margin after round 0 (the linear part) instead of a
+      // silent 26-minute run; at <=10x it measures normally
+      "d32_guard" -> (() => graft.ops.SuffixArray
+        .crossDocRepeats(plain, "doc_id", "text", "source")),
+      // the winnow→exact funnel (r10): candidate sources via the
+      // d29 index, the exact d32 pass only on flagged sources —
+      // on this corpus every source is flagged (shared boilerplate
+      // everywhere), so the row bounds the funnel's overhead; the
+      // mostly-clean-corpus win is measured by p07clean below
+      "p07" -> (() => {
+        val docs = plain
+        val cand = Dedup.funnelCandidateSources(docs)
+        graft.ops.SuffixArray.crossDocRepeats(
+          docs.join(broadcast(cand), Seq("source"), "left_semi"),
+          "doc_id", "text", "source")
+      }),
+      // the funnel on a MOSTLY-CLEAN corpus (r10): per-doc unique
+      // salts kill cross-doc 12+-char repeats in 19 of 20 sources
+      // (one source keeps planted boilerplate), so the winnow stage
+      // must skip ~95% of the exact-pass volume — the funnel's
+      // actual 100 TB claim, measured against d32clean below
+      "p07clean" -> (() => {
+        val docs = saltedClean(plain).localCheckpoint(true)
+        val cand = Dedup.funnelCandidateSources(docs)
+        graft.ops.SuffixArray.crossDocRepeats(
+          docs.join(broadcast(cand), Seq("source"), "left_semi"),
+          "doc_id", "text", "source")
+      }),
+      // whole-corpus d32 on the same mostly-clean corpus: the
+      // baseline p07clean must beat
+      "d32clean" -> (() => graft.ops.SuffixArray
+        .crossDocRepeats(saltedClean(plain), "doc_id", "text", "source")))
+
+    // the budget-guard probes, run after the scale loop. d11: a
+    // low-entropy corpus (every doc the same short token set) makes
+    // every prefix a mega-group; the guard must refuse in seconds with
+    // a diagnosis, not hang in the self-join
+    val lowEntropy = spark.range(0, 20000)
+      .select(col("id").as("doc_id"),
+        lit("alpha beta gamma delta epsilon zeta eta theta").as("text"))
+    // s15 (round 7): an all-positive-coordinate corpus collapses every
+    // vector into ONE sign bucket — C(30000, 2) ≈ 4.5e8 candidates
+    // against the 2^26 default budget; the guard must refuse before
+    // the self-join, in seconds
+    val skewVecs = spark.range(0, 30000)
+      .select(col("id").as("vec_id"),
+        expr("transform(sequence(1, 16), " +
+          "j -> CAST(1.0 + (id % 97) / 100.0 AS FLOAT))").as("embedding"))
+    // m09 (round 7 cont.): byte-identical payloads give every media the
+    // same aHash — one bucket per band, 4·C(200000, 2) ≈ 8e10
+    // candidates vs the 2^26 default; the guard must refuse before the
+    // self-join
+    val uniformMedia = spark.range(0, 200000)
+      .select(col("id").as("media_id"),
+        lit("q" * 64).cast("binary").as("payload"))
+    val guards: Seq[(String, () => Long)] = Seq(
+      "d11_guard" -> (() => Dedup.prefixFilterPairs(lowEntropy, "doc_id",
+        "text", tauNum = 9, tauDen = 10,
+        tokens = t => array_distinct(Dedup.shingleHashes(t))).count()),
+      "s15_guard" -> (() =>
+        Similarity.knnGraph(skewVecs, k = 3, bits = 8).count()),
+      "m09_guard" -> (() =>
+        graft.ops.Multimodal.perceptualHashPairs(uniformMedia).count()),
+      // d21: the same low-entropy corpus through the asymmetric filter —
+      // its indexed side is the FULL token relation, so the refusal
+      // matters even more than d11's
+      "d21_guard" -> (() => Dedup.containmentPairs(lowEntropy, "doc_id",
+        "text", tauNum = 9, tauDen = 10,
+        tokens = t => array_distinct(Dedup.shingleHashes(t))).count()))
+
+    // SCALE_OPS=d21,s17 runs a subset (the BENCH_ONLY pattern): the
+    // heavy families take minutes per scale, so iterating on one fix
+    // must not pay the whole matrix
+    val selected = Cli.envSubset("SCALE_OPS",
+      ops.map(_._1) ++ ("ingest" +: guards.map(_._1))).toSet
+    val scaleOps = ops.filter(o => selected(o._1))
+
+    if (scaleOps.nonEmpty || selected("ingest")) for (k <- scales) {
+      corpus = withMutations(inflateDocs(k)).localCheckpoint(true)
+      plain = inflateDocs(k).localCheckpoint(true)
+      events = inflateEvents(k).localCheckpoint(true)
+      vecs = inflateVecs(k).localCheckpoint(true)
       // d17's PERSISTED state, built OUTSIDE the timed closure: the
       // claim under measurement is "refresh ∝ batch" — timing the
       // history banding/clustering would measure re-clustering instead
       // (in production these are parquet state from prior runs)
       val hist17 = corpus.where(col("doc_id") < 1000000000L)
-      val batch17 = corpus.where(col("doc_id") >= 1000000000L)
-      val histBands17 = Dedup.bandKeys(hist17, "doc_id", "text")
+      batch17 = corpus.where(col("doc_id") >= 1000000000L)
+      histBands17 = Dedup.bandKeys(hist17, "doc_id", "text")
         .localCheckpoint(true)
-      val histLabels17 = Dedup.connectedComponents(
+      histLabels17 = Dedup.connectedComponents(
           histBands17.as("a").join(histBands17.as("b"),
               col("a.band_idx") === col("b.band_idx") &&
                 col("a.band_key") === col("b.band_key") &&
@@ -257,8 +565,8 @@ object ScaleStress {
       // rewrite from the merged index (d36, corpus-sized by contract:
       // the cut face rewrites every doc)
       val hist36 = corpus.where(col("doc_id") < 1000000000L)
-      val batch36 = corpus.where(col("doc_id") >= 1000000000L)
-      val histIx36 = graft.ops.SuffixArray.crossSpanIndex(
+      batch36 = corpus.where(col("doc_id") >= 1000000000L)
+      histIx36 = graft.ops.SuffixArray.crossSpanIndex(
           hist36, "doc_id", "text", "source", minLen = 20)
         .localCheckpoint(true)
       // snapshot AFTER the corpus checkpoints: the sweep below must
@@ -267,289 +575,7 @@ object ScaleStress {
       // nothing — the SearchStreams snapshot pattern is the safe one)
       val pinned = spark.sparkContext.getPersistentRDDs.keySet
 
-      val ops: Seq[(String, () => DataFrame)] = Seq(
-        "d02" -> (() =>
-          Dedup.minHashCandidatePairs(corpus, "doc_id", "text")),
-        "d06" -> (() => Dedup.connectedComponents(
-          Dedup.minHashCandidatePairs(corpus, "doc_id", "text"))),
-        "d11" -> (() => Dedup.prefixFilterPairs(corpus, "doc_id", "text",
-          tauNum = 9, tauDen = 10,
-          tokens = t => array_distinct(Dedup.shingleHashes(t)))),
-        "c04" -> (() => {
-          val labeled = Dedup
-            .connectedComponentsOverBuckets(corpus, "doc_id", "text")
-            .join(corpus, col("id") === col("doc_id"))
-            .select(col("label"), col("doc_id"),
-              length(col("text")).cast("long").as("n_chars"))
-          Curation.keepBest(labeled, "label", "doc_id", col("n_chars"))
-        }),
-        "g01" -> (() => Graph.pageRank(Graph.chainEdges(events,
-          Seq(col("event_type"), date_trunc("hour", col("ts"))),
-          "user_id", "ts"), 5)),
-        "p01" -> (() => Pipeline.curate(plain, emptyBench,
-          "doc_id", "text", "source", 0.5, 4096L)),
-        // incremental cluster maintenance: the timed work is ONLY the
-        // refresh — probe join + batch-edge CC + label remap over the
-        // pre-built (checkpointed) history state above — so the curve
-        // measures the "refresh ∝ batch, never history²" claim itself
-        "d17" -> (() => Dedup.incrementalClusters(histLabels17,
-          Dedup.incrementalMinHashCandidates(
-            histBands17, batch17, "doc_id", "text"))),
-        // k-NN graph: copies sign-flip the first 8 dims by the copy
-        // index, XOR-remapping the 8-bit sign bucket — copies occupy
-        // DISJOINT buckets, so density (and per-bucket m² cost) stays
-        // constant as k grows: the measured curve demonstrates the
-        // "size bits to corpus/2^bits" rule from the scaladoc instead
-        // of the k² blowup identical copies would fake
-        "s15" -> (() => Similarity.knnGraph(vecs, k = 3, bits = 8)),
-        // the banded variant under MEASURED-OCCUPANCY bits (the r8 fix
-        // for r7's 2.28 tail exponent): scaledBits seeds from the mean
-        // model, then targetP99Occupancy escalates bitsPerBand until
-        // the measured p99 bucket size meets the target — real SRP
-        // skew is sized against what the buckets actually hold, not
-        // what n/2^bits predicts
-        "s17" -> (() => {
-          val n = vecs.count()
-          Similarity.knnGraphBanded(vecs, k = 3, bands = 2,
-            bitsPerBand = Similarity.scaledBits(n, targetBucketSize = 128L),
-            targetP99Occupancy = 128L)
-        }),
-        // the e14-class hazard vs its r7 fix, measured side by side:
-        // the ntile form's two global windows funnel every user into
-        // one task; the threshold form's only window runs over the
-        // distinct-VALUE axis. Both thunks pin the user-level relation
-        // first (quantileTiles runs several driver actions over it —
-        // an unpinned rfm would recompute the events groupBy per
-        // action and the curve would measure recomputation, not the
-        // operator)
-        "e14_ntile" -> (() => {
-          import org.apache.spark.sql.expressions.Window
-          val rfm = rfmOf(events).localCheckpoint(true)
-          val rW = Window.orderBy(col("recency_days").asc, col("user_id"))
-          val fW = Window.orderBy(col("frequency").desc, col("user_id"))
-          rfm.withColumn("r", ntile(3).over(rW).cast("long"))
-            .withColumn("f", ntile(3).over(fW).cast("long"))
-        }),
-        "e15" -> (() => Segmentation.quantileTiles(
-          rfmOf(events).localCheckpoint(true),
-          Seq(("recency_days", true), ("frequency", false)), k = 3)),
-        // containment join (r7 cont.): the asymmetric prefix filter —
-        // probe prefixes join the FULL token relation, so its curve is
-        // the one to watch (the cost model says Σ dfp·(df−1), linear
-        // while rare-token df stays bounded under inflation)
-        "d21" -> (() => Dedup.containmentPairs(
-          withExcerpts(plain), "doc_id", "text",
-          tauNum = 9, tauDen = 10,
-          tokens = t => array_distinct(Dedup.shingleHashes(t)))),
-        // the pre-blocked escape hatch (r9): containment within equal
-        // `source` only — the blocking contract a corpus past the
-        // unblocked budget opts into. Excerpt twins inherit their
-        // base's source, so every planted pair stays in-block; the
-        // curve should keep running where plain d21 guard-trips
-        // (measured 30× margin was 1.47×, one 20-way block's savings)
-        "d21b" -> (() => Dedup.containmentPairs(
-          withExcerpts(plain), "doc_id", "text",
-          tauNum = 9, tauDen = 10,
-          tokens = t => array_distinct(Dedup.shingleHashes(t)),
-          blockBy = Some(col("source")))),
-        // the AUTO router (r10): exact whole-corpus while the measured
-        // volume fits, pre-blocked when it doesn't — at 30× this must
-        // run GREEN without manual intervention where plain d21
-        // guard-trips (margin 1.47×), because the router takes the
-        // blocked path on the same measured signal
-        "d21auto" -> (() => Dedup.containmentPairsAuto(
-          withExcerpts(plain), "doc_id", "text",
-          tauNum = 9, tauDen = 10, blockBy = col("source"))),
-        // k-core peeling (r7 cont.): copies are structurally identical
-        // disjoint subgraphs, so cascade DEPTH (and hence round count)
-        // is scale-invariant — the curve isolates per-round work ∝
-        // surviving edges
-        "g08" -> (() => Graph.kCore(Graph.chainEdges(events,
-          Seq(col("event_type"), date_trunc("hour", col("ts")),
-            pmod(col("user_id"), lit(16L))), "user_id", "ts"),
-          k = 6, maxRounds = 24)),
-        // HyperBall (r9): per-round cost is one edges⋈registers join +
-        // a (node, bucket) max-merge — state per node is CONSTANT (64
-        // registers), so the curve should track |edges| linearly, the
-        // property that separates it from the quadratic exact closure
-        "g12" -> (() => Graph.hyperBall(Graph.chainEdges(events,
-          Seq(col("event_type"), date_trunc("hour", col("ts"))),
-          "user_id", "ts"), radius = 2)),
-        // CDC chunk dedup (r9): one generated pass per doc + a chunk-
-        // hash groupBy over the ~n/31-row chunk relation — d01's scale
-        // shape; the curve guards against the per-character-explode
-        // regression the operator was designed to avoid
-        "d27" -> (() => {
-          val ck = corpus.select(col("source"),
-            explode(graft.functions.TextHashExpressions
-              .cdc_chunks(col("text"), 8, 31)).as("chunk"))
-          ck.select(col("source"), md5(col("chunk")).as("h"),
-              length(col("chunk")).cast("long").as("len"))
-            .groupBy("source", "h")
-            .agg(count(lit(1)).as("cnt"), min("len").as("len"))
-            .groupBy("source").agg(
-              sum("cnt").as("n_chunks"),
-              count(lit(1)).as("n_distinct_chunks"),
-              sum((col("cnt") - 1) * col("len")).as("dup_chars"))
-        }),
-        // the q54/c21 pair, measured side by side (the e14/e15 story
-        // for row numbering): the naive global row_number funnels the
-        // corpus into ONE task; the two-pass granule form distributes
-        // all but the granule-totals window
-        "c21_naive" -> (() => {
-          import org.apache.spark.sql.expressions.Window
-          val h = plain.withColumn("__h",
-            Dedup.md5Hash32(col("doc_id").cast("string")))
-          h.withColumn("shuffle_pos",
-            row_number().over(Window.orderBy(col("__h"), col("doc_id")))
-              .cast("long") - 1)
-        }),
-        "c21" -> (() => graft.ops.Layout.globalIndex(
-          plain.withColumn("__h",
-            Dedup.md5Hash32(col("doc_id").cast("string"))),
-          col("__h"), col("doc_id"), granule = 1L << 24,
-          out = "shuffle_pos")),
-        // suffix ranks (r9): n (doc, pos, rank) rows, one head
-        // exchange + log₄ in-partition window-sort rounds — expected
-        // ~linear in corpus chars; tie depth (hence round count) is
-        // scale-invariant because copies are vowel-rotated, never
-        // repeated
-        "d30" -> (() => graft.ops.SuffixArray
-          .suffixRanks(plain, "doc_id", "text")),
-        // winnowing (r9): one generated pass per doc, then the d01
-        // groupBy/join shape over ~2/(w+1) of the gram volume
-        "d29" -> (() => Dedup.winnowStats(plain, "doc_id", "text")),
-        // generalized suffix array (r9): positions scale ×k while
-        // copies stay mutually dissimilar (vowel rotation), so tie
-        // depth — hence round count — is scale-invariant and the
-        // curve should track corpus chars linearly
-        "d32" -> (() => graft.ops.SuffixArray
-          .crossDocRepeats(plain, "doc_id", "text", "source")),
-        // skewed corpus (r10): ONE document 100× the median length —
-        // the shape the round-9 verdict flagged. It stays under the
-        // giant threshold, so this row measures the WINDOW path's
-        // tolerance: one outlier task among thousands of small
-        // groups, the curve must stay within noise of plain d30
-        "d30skew" -> (() => graft.ops.SuffixArray
-          .suffixRanks(withMedianOutlier(plain), "doc_id", "text")),
-        // genuinely giant outlier (r10): one ~3M-char document — PAST
-        // the 2M giant threshold, so its rank rounds run the
-        // range-partitioned WIDE path (the implemented d30/d31
-        // fallback) while the normal docs stay windowed; the curve is
-        // "constant wide-path outlier + k×-growing windowed corpus",
-        // previously a single-task serialization
-        "d30giant" -> (() => graft.ops.SuffixArray
-          .suffixRanks(withGiantDoc(plain), "doc_id", "text")),
-        // the suffix-array removal face (r10): d31's chain + per-doc
-        // island merge + complement fold — expected to track d31
-        "d34" -> (() => graft.ops.SuffixArray
-          .removeRepeatedSpans(plain, "doc_id", "text", minLen = 12)),
-        // d34 with the ~3M-char giant (r11): the giant doc reroutes
-        // around the doc-bounded pair window and collect_list array
-        // via the gram-coverage identity — previously the one
-        // unguarded cliff left in the family
-        "d34giant" -> (() => graft.ops.SuffixArray
-          .removeRepeatedSpans(withGiantDoc(plain), "doc_id", "text",
-            minLen = 12)),
-        // d32 with a giant single-doc source (r11): round 0 dispatches
-        // the >2M-char concatenation to the wide gram + class-level
-        // stable rank while every normal source stays windowed —
-        // previously that source's round 0 sorted in ONE task
-        "d32giant" -> (() => graft.ops.SuffixArray
-          .crossDocRepeats(withGiantDoc(plain), "doc_id", "text",
-            "source")),
-        // cross-doc span removal (r11): one gram pass + a
-        // (source, gram) distinct-doc count + the d34 cut faces —
-        // the d19 scale shape at char granularity, expected
-        // near-linear
-        "d35" -> (() => graft.ops.SuffixArray
-          .crossDocSpanRemoval(plain, "doc_id", "text", "source",
-            minLen = 20)),
-        // d35 at the deployed ExactSubstr threshold (r12): minLen=250
-        // on the mutated-twin corpus (every >=250-char doc's windows
-        // recur verbatim in its twin) — the regime where the gram
-        // carrier's minLen-char shuffle keys are widest
-        "d35wide" -> (() => graft.ops.SuffixArray
-          .crossDocSpanRemoval(corpus, "doc_id", "text", "source",
-            minLen = 250)),
-        // the same threshold on a mostly-clean corpus (per-doc salts
-        // break every cross-doc run outside src0): candidates are
-        // sparse, but every position still ships its 250-char key
-        "d35widec" -> (() => graft.ops.SuffixArray
-          .crossDocSpanRemoval(saltedClean(plain), "doc_id", "text",
-            "source", minLen = 250)),
-        // d35 with the ~3M-char giant (r12): the giant's grams route
-        // through gatherGrams + cutCoveredGiant (d34giant's stages)
-        // plus the (source, gram) distinct-doc count — the dedicated
-        // giant-path row d34giant has and d35 lacked
-        "d35giant" -> (() => graft.ops.SuffixArray
-          .crossDocSpanRemoval(withGiantDoc(plain), "doc_id", "text",
-            "source", minLen = 20)),
-        // d36's settle face (round 13): refresh-only — index the batch
-        // half + merge with the prebuilt history index by pure algebra;
-        // the curve must track the BATCH, not the corpus (history never
-        // re-grams)
-        "d36ix" -> (() => graft.ops.SuffixArray.crossSpanIndexMerge(
-          histIx36,
-          graft.ops.SuffixArray.crossSpanIndex(batch36, "doc_id", "text",
-            "source", minLen = 20))),
-        // the full d36 refresh INCLUDING the rewrite from the merged
-        // index — corpus-sized by contract (the cut face rewrites every
-        // doc); expected ≈ d35 minus the history gram recount
-        "d36" -> (() => graft.ops.SuffixArray.crossDocSpanRemovalFromIndex(
-          corpus,
-          graft.ops.SuffixArray.crossSpanIndexMerge(histIx36,
-            graft.ops.SuffixArray.crossSpanIndex(batch36, "doc_id", "text",
-              "source", minLen = 20)),
-          "doc_id", "text", "source", minLen = 20)),
-        // the d32 tie-mass guard row (r12): the same call as d32 at
-        // the DEFAULT budget — at 30x the frozen-level tie mass
-        // (~18.7M) exceeds the 8M budget and the row records the
-        // refusal margin after round 0 (the linear part) instead of a
-        // silent 26-minute run; at <=10x it measures normally
-        "d32_guard" -> (() => graft.ops.SuffixArray
-          .crossDocRepeats(plain, "doc_id", "text", "source")),
-        // the winnow→exact funnel (r10): candidate sources via the
-        // d29 index, the exact d32 pass only on flagged sources —
-        // on this corpus every source is flagged (shared boilerplate
-        // everywhere), so the row bounds the funnel's overhead; the
-        // mostly-clean-corpus win is measured by p07clean below
-        "p07" -> (() => {
-          val docs = plain
-          val cand = Dedup.funnelCandidateSources(docs)
-          graft.ops.SuffixArray.crossDocRepeats(
-            docs.join(broadcast(cand), Seq("source"), "left_semi"),
-            "doc_id", "text", "source")
-        }),
-        // the funnel on a MOSTLY-CLEAN corpus (r10): per-doc unique
-        // salts kill cross-doc 12+-char repeats in 19 of 20 sources
-        // (one source keeps planted boilerplate), so the winnow stage
-        // must skip ~95% of the exact-pass volume — the funnel's
-        // actual 100 TB claim, measured against d32clean below
-        "p07clean" -> (() => {
-          val docs = saltedClean(plain).localCheckpoint(true)
-          val cand = Dedup.funnelCandidateSources(docs)
-          graft.ops.SuffixArray.crossDocRepeats(
-            docs.join(broadcast(cand), Seq("source"), "left_semi"),
-            "doc_id", "text", "source")
-        }),
-        // whole-corpus d32 on the same mostly-clean corpus: the
-        // baseline p07clean must beat
-        "d32clean" -> (() => graft.ops.SuffixArray
-          .crossDocRepeats(saltedClean(plain), "doc_id", "text", "source")))
-
-      // SCALE_OPS=d21,s17 runs a subset (the BENCH_ONLY pattern): the
-      // heavy families take minutes per scale, so iterating on one
-      // fix must not pay the whole matrix. Unknown names fail loudly.
-      val opFilter = sys.env.get("SCALE_OPS").map { list =>
-        val want = list.split(',').map(_.trim).filter(_.nonEmpty).toSet
-        val unknown = want -- ops.map(_._1).toSet - "ingest"
-        if (unknown.nonEmpty)
-          throw new IllegalArgumentException(
-            s"SCALE_OPS names not in ScaleStress ops: ${unknown.toSeq.sorted.mkString(", ")}")
-        want
-      }
-      ops.filter(o => opFilter.forall(_.contains(o._1))).foreach { case (op, build) =>
+      scaleOps.foreach { case (op, build) =>
         // a guarded refusal (d11's candidate budget) is ITSELF a
         // measurement — record it WITH its cost (how fast the guard
         // refuses is the guard's claim) and keep going
@@ -578,7 +604,7 @@ object ScaleStress {
       // flatten → keyed overwrite → tall lake write → FK edges →
       // audit — plus forcing every wide view (the IngestDemo read
       // path). Temp dirs are deleted after the row.
-      if (opFilter.forall(_.contains("ingest"))) {
+      if (selected("ingest")) {
         val xmlDir = java.nio.file.Files
           .createTempDirectory("graft-sc-xml-").toString
         val lakeDir = java.nio.file.Files
@@ -639,48 +665,8 @@ object ScaleStress {
       histIx36.unpersist()
     }
 
-    // the d11 budget guard: a low-entropy corpus (every doc the same
-    // short token set) makes every prefix a mega-group; the guard must
-    // refuse in seconds with a diagnosis, not hang in the self-join
-    val lowEntropy = spark.range(0, 20000)
-      .select(col("id").as("doc_id"),
-        lit("alpha beta gamma delta epsilon zeta eta theta").as("text"))
-    guardProbe("d11_guard") {
-      Dedup.prefixFilterPairs(lowEntropy, "doc_id", "text",
-        tauNum = 9, tauDen = 10,
-        tokens = t => array_distinct(Dedup.shingleHashes(t))).count()
-    }
-
-    // the s15 budget guard (round 7): an all-positive-coordinate corpus
-    // collapses every vector into ONE sign bucket — C(30000, 2) ≈ 4.5e8
-    // candidates against the 2^26 default budget; the guard must refuse
-    // before the self-join, in seconds
-    val skewVecs = spark.range(0, 30000)
-      .select(col("id").as("vec_id"),
-        expr("transform(sequence(1, 16), " +
-          "j -> CAST(1.0 + (id % 97) / 100.0 AS FLOAT))").as("embedding"))
-    guardProbe("s15_guard") {
-      Similarity.knnGraph(skewVecs, k = 3, bits = 8).count()
-    }
-
-    // the m09 budget guard (round 7 cont.): byte-identical payloads
-    // give every media the same aHash — one bucket per band,
-    // 4·C(200000, 2) ≈ 8e10 candidates vs the 2^26 default; the guard
-    // must refuse before the self-join
-    val uniformMedia = spark.range(0, 200000)
-      .select(col("id").as("media_id"),
-        lit("q" * 64).cast("binary").as("payload"))
-    guardProbe("m09_guard") {
-      graft.ops.Multimodal.perceptualHashPairs(uniformMedia).count()
-    }
-
-    // the d21 budget guard: the same low-entropy corpus through the
-    // asymmetric filter — its indexed side is the FULL token relation,
-    // so the refusal matters even more than d11's
-    guardProbe("d21_guard") {
-      Dedup.containmentPairs(lowEntropy, "doc_id", "text",
-        tauNum = 9, tauDen = 10,
-        tokens = t => array_distinct(Dedup.shingleHashes(t))).count()
+    guards.filter(g => selected(g._1)).foreach { case (name, probe) =>
+      guardProbe(name)(probe())
     }
 
     spark.stop()

@@ -27,13 +27,7 @@ object StateCompactMain {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, usage)
     val Array(kind, dir) = args
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, kind, dir)
     finally spark.stop()

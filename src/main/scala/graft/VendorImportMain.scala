@@ -2,8 +2,6 @@ package graft
 
 import java.io.File
 
-import org.apache.spark.sql.SparkSession
-
 import graft.etl.JdbcMirror
 import graft.sources.{VendorImport, XlsxSheetProvider}
 
@@ -33,28 +31,6 @@ object VendorImportMain {
     "usage: VendorImportMain -file_path <xlsx-or-csv-dir> -vendor <vendor> " +
       "-source <source> [--jdbc-url <url>] [--jdbc-schema <schema>]"
 
-  private val ValueKeys =
-    Set("-file_path", "-vendor", "-source", "--jdbc-url", "--jdbc-schema")
-
-  /** Strict key/value parse shared with [[DictionaryLoadMain]]: every
-    * argument must be a recognized key followed by its value; duplicate
-    * and unknown keys fail loudly, as does a trailing value-less key.
-    */
-  private[graft] def parseKv(args: Array[String], valueKeys: Set[String],
-      usage: String): Map[String, String] = {
-    val out = scala.collection.mutable.Map.empty[String, String]
-    var i = 0
-    while (i < args.length) {
-      val k = args(i)
-      require(valueKeys.contains(k), s"unknown argument: $k\n$usage")
-      require(i + 1 < args.length, s"missing value for $k\n$usage")
-      require(!out.contains(k), s"duplicate argument: $k\n$usage")
-      out(k) = args(i + 1)
-      i += 2
-    }
-    out.toMap
-  }
-
   private[graft] def dialectFor(url: String): JdbcMirror.SqlDialect =
     if (url.startsWith("jdbc:derby")) JdbcMirror.DerbyDialect
     else JdbcMirror.PostgresDialect
@@ -77,7 +53,8 @@ object VendorImportMain {
     }
 
   def main(args: Array[String]): Unit = {
-    val kv = parseKv(args, ValueKeys, usage)
+    val kv = Cli.parse(args, usage, positional = 0 to 0, valueKeys =
+      Set("-file_path", "-vendor", "-source", "--jdbc-url", "--jdbc-schema")).values
     val filePath = kv.getOrElse("-file_path", sys.error(s"-file_path is required\n$usage"))
     val vendor = kv.getOrElse("-vendor", sys.error(s"-vendor is required\n$usage"))
     val source = kv.getOrElse("-source", sys.error(s"-source is required\n$usage"))
@@ -86,12 +63,7 @@ object VendorImportMain {
     val f = new File(filePath)
     require(f.exists(), s"Excel file not found: $filePath")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       val provider =

@@ -1,23 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same codegen-cache sizing as Bench (see the comment there):
-      // 229 queries × the default 100-entry cache = constant
-      // regenerate/recompile churn; wall-time only, results unchanged
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000"))
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Queries run from a small thread pool: Spark's scheduler accepts
@@ -27,23 +15,13 @@ object Verify {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt)
     // VERIFY_ONLY=t12_bpe_merges,t13_bpe_encode dumps a subset — the
-    // iteration aid mirroring Bench's BENCH_ONLY; unknown names fail
-    // loudly for the same reason (a typo must not verify nothing and
-    // read as green). The full oracle_sql.json is still written, so
-    // scripts/check.py must be pointed at the same subset when used.
-    val selected = sys.env.get("VERIFY_ONLY") match {
-      case Some(list) =>
-        val want = list.split(',').map(_.trim).filter(_.nonEmpty).toSet
-        require(want.nonEmpty,
-          "VERIFY_ONLY is set but names no queries - an empty subset must not verify nothing and read as green")
-        val unknown = want -- SparkEntry.queries.keySet
-        if (unknown.nonEmpty)
-          throw new IllegalArgumentException(
-            s"VERIFY_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-        SparkEntry.queries.filter { case (n, _) => want(n) }
-      case None => SparkEntry.queries
-    }
-    val tasks = selected.toSeq.map { case (name, fn) =>
+    // iteration aid mirroring Bench's BENCH_ONLY. The full
+    // oracle_sql.json is still written, so scripts/check.py must be
+    // pointed at the same subset when used.
+    val queries = SparkEntry.queries
+    val selected = Cli.envSubset("VERIFY_ONLY", queries.keys.toSeq)
+    val tasks = selected.map { name =>
+      val fn = queries(name)
       pool.submit(new Runnable {
         override def run(): Unit =
           try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
-/** Shared local SparkSession for specs. */
+/** Shared local SparkSession for specs: the production conf
+  * ([[GraftSession]]) at 2 threads, plus a temp warehouse dir. */
 trait SparkSpec extends BeforeAndAfterAll { self: Suite =>
 
   lazy val spark: SparkSession = SparkSpec.session
@@ -13,14 +14,10 @@ trait SparkSpec extends BeforeAndAfterAll { self: Suite =>
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
+    val s = GraftSession.builder(cpus = 2)
       .appName("graft-test")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

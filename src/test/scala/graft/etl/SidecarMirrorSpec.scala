@@ -113,14 +113,28 @@ class SidecarMirrorSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("CLI arg parse is strict: unknown, value-less, duplicate keys all fail") {
-    import graft.VendorImportMain.parseKv
+    import graft.Cli.{Args, parse}
     val keys = Set("-file_path", "-vendor", "-source")
-    assert(parseKv(Array("-vendor", "imagetrend", "-source", "s1"), keys, "u")
+    def kv(args: String*) = parse(args, "u", 0 to 0, keys).values
+    assert(kv("-vendor", "imagetrend", "-source", "s1")
       == Map("-vendor" -> "imagetrend", "-source" -> "s1"))
-    intercept[IllegalArgumentException](parseKv(Array("--nope", "x"), keys, "u"))
-    intercept[IllegalArgumentException](parseKv(Array("-vendor"), keys, "u"))
-    intercept[IllegalArgumentException](
-      parseKv(Array("-vendor", "a", "-vendor", "b"), keys, "u"))
+    intercept[IllegalArgumentException](kv("--nope", "x"))
+    intercept[IllegalArgumentException](kv("-vendor"))
+    intercept[IllegalArgumentException](kv("-vendor", "a", "-vendor", "b"))
+    // a value key takes the next argument even when it starts with '-'
+    assert(kv("-source", "-x") == Map("-source" -> "-x"))
+    // a positional where the command takes none
+    intercept[IllegalArgumentException](kv("stray"))
+    // positionals, value keys and boolean flags mix in any order
+    def withPos(args: String*) =
+      parse(args, "u", 1 to 2, keys, flagKeys = Set("--sort"))
+    assert(withPos("--sort", "lake", "-vendor", "v", "10")
+      == Args(Seq("lake", "10"), Map("-vendor" -> "v"), Set("--sort")))
+    assert(withPos("lake") == Args(Seq("lake"), Map.empty, Set.empty))
+    intercept[IllegalArgumentException](withPos())
+    intercept[IllegalArgumentException](withPos("a", "b", "c"))
+    intercept[IllegalArgumentException](withPos("--sort", "lake", "--sort"))
+    intercept[IllegalArgumentException](withPos("lake", "--sort-by"))
     assert(graft.VendorImportMain.dialectFor("jdbc:derby:memory:x") == JdbcMirror.DerbyDialect)
     assert(graft.VendorImportMain.dialectFor("jdbc:postgresql://h/db") == JdbcMirror.PostgresDialect)
   }
